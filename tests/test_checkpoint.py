@@ -10,7 +10,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from tfidf_spark.index.builder import build_index, load_index
+from tfidf_spark.index.builder import build_index, load_index, write_manifest
 from tfidf_spark.index.query import bm25_query_terms
 
 
@@ -59,3 +59,21 @@ def test_partition_lineage_rows(spark, tiny_corpus, tmp_path):
     assert sum(r["n_docs"] for r in rows) == 6
     assert sum(r["n_postings"] for r in rows) == m["metrics"]["postings_emitted"]
     assert all(r["stage"] == "postings" for r in rows)
+
+
+def test_manifest_write_is_atomic(tmp_path):
+    """A manifest that fails to serialize leaves the committed one
+    byte-identical and no partial or temp file behind."""
+    write_manifest(str(tmp_path), {"n_docs": 1})
+    path = tmp_path / "manifest.json"
+    before = path.read_bytes()
+    with pytest.raises(TypeError):
+        write_manifest(str(tmp_path), {"n_docs": 2, "bad": object()})
+    assert path.read_bytes() == before
+    assert os.listdir(tmp_path) == ["manifest.json"]
+    # the first commit into an empty directory is all-or-nothing too
+    fresh = tmp_path / "fresh"
+    fresh.mkdir()
+    with pytest.raises(TypeError):
+        write_manifest(str(fresh), {"bad": object()})
+    assert os.listdir(fresh) == []

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from tfidf_spark.index.codec import (
@@ -12,7 +12,7 @@ from tfidf_spark.index.codec import (
     decode_block,
     decode_postings,
     encode_postings,
-    merge_encoded_runs,
+    encode_runs,
     to_signed,
     to_unsigned,
     varint_decode,
@@ -97,21 +97,31 @@ def test_huge_gaps():
     assert np.array_equal(got_ids, ids)
 
 
-def test_merge_encoded_runs():
-    rng = np.random.default_rng(7)
-    all_ids = rng.choice(2**40, size=500, replace=False).astype(np.int64) - 2**39
-    w = rng.random(500)
-    runs = []
-    for part in range(4):
-        sel = np.arange(500) % 4 == part
-        pb, wb, *_ = encode_postings(all_ids[sel], w[sel])
-        runs.append((pb, wb))
-    pb, wb, block_last, block_max, block_off, n = merge_encoded_runs(runs)
-    got_ids, got_w = decode_postings(pb, wb)
-    order = np.argsort(to_unsigned(all_ids), kind="stable")
-    assert n == 500
-    assert np.array_equal(got_ids, all_ids[order])
-    assert np.allclose(got_w, w[order])
+@settings(max_examples=100, deadline=None)
+@given(
+    st.lists(
+        st.one_of(st.sampled_from([1, 127, 128, 129]), st.integers(1, 400)),
+        min_size=1,
+        max_size=5,
+    ),
+    st.integers(0, 2**31),
+)
+@example(sizes=[1, 127, 128, 129], seed=0)
+def test_encode_runs_equals_each_run_alone(sizes, seed):
+    """One multi-run call (what the index build runs) is byte-identical,
+    run by run, to encoding every run on its own."""
+    rng = np.random.default_rng(seed)
+    ids_parts, w_parts = [], []
+    for n in sizes:
+        ids = rng.choice(2**62, size=n, replace=False).astype(np.int64) - 2**61
+        ids_parts.append(np.sort(ids))
+        w_parts.append(rng.random(n))
+    starts = np.cumsum([0] + sizes[:-1])
+    got = encode_runs(np.concatenate(ids_parts), np.concatenate(w_parts), starts)
+    keys = ("postings", "weights", "block_last", "block_max", "block_off", "n")
+    for i, (ids, w) in enumerate(zip(ids_parts, w_parts)):
+        alone = encode_postings(ids, w, presorted=True)
+        assert tuple(got[k][i] for k in keys) == alone
 
 
 def test_compression_actually_compresses():

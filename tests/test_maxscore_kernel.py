@@ -13,6 +13,7 @@ import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
+from pyspark.sql import functions as F
 
 from tfidf_spark.index.builder import INDEX_SCHEMA  # noqa: F401 (schema parity)
 from tfidf_spark.index.codec import encode_postings
@@ -139,3 +140,67 @@ def test_kernel_duplicate_free_and_sorted():
     assert got["doc_id"].is_unique
     s = got["score"].to_numpy()
     assert all(s[i] >= s[i + 1] - 1e-12 for i in range(len(s) - 1))
+
+
+def _tie_rows(shard: int, lists, k: int = 10):
+    """Kernel rows of one shard: ``lists`` = [(term, {doc_id: weight})]."""
+    rows = []
+    for term, postings in lists:
+        ids = np.array(sorted(postings), dtype=np.int64)
+        ws = np.array([postings[d] for d in sorted(postings)])
+        pb, wb, block_last, block_max, block_off, _ = encode_postings(ids, ws)
+        rows.append(
+            {
+                "query_id": 1, "k": k, "term": term, "mult": 1.0, "shard": shard,
+                "postings": pb, "weights": wb, "block_last": block_last,
+                "block_max": block_max, "block_off": block_off,
+            }
+        )
+    return rows
+
+
+def test_exact_tie_across_shards_breaks_by_doc_id():
+    """Docs 20 (shard 0) and 10 (shard 1) have identical contributions
+    0.1 + 0.2 + 0.3, but their shards sort the lists differently by upper
+    bound (a hot doc makes t1 lead in shard 0, t3 in shard 1). Summed in
+    list order the two totals differ by 1 ulp ((0.1 + 0.3) + 0.2 vs
+    (0.3 + 0.2) + 0.1); the kernel must give both the same bits so the
+    doc_id tie-break decides — per shard then merged (the batch path)
+    and with every shard's runs in one kernel (the local path)."""
+    s0 = _tie_rows(0, [("t1", {20: 0.1, 21: 5.0}), ("t2", {20: 0.2}), ("t3", {20: 0.3})])
+    s1 = _tie_rows(1, [("t1", {10: 0.1}), ("t2", {10: 0.2}), ("t3", {10: 0.3, 11: 5.0})])
+    per_shard = pd.concat([_topk_shard(pd.DataFrame(s0)), _topk_shard(pd.DataFrame(s1))])
+    one_kernel = _topk_shard(pd.DataFrame(s0 + s1))
+    for got in (per_shard, one_kernel):
+        score = dict(zip(got["doc_id"], got["score"]))
+        assert score[20] == score[10]
+        ranked = got.sort_values(["score", "doc_id"], ascending=[False, True])
+        assert ranked["doc_id"].tolist() == [11, 21, 10, 20]
+
+
+def test_exact_tie_across_shards_on_every_query_path(spark, tmp_path):
+    """The same defect end to end: docs 12 (shard 0) and 3 (shard 1)
+    have the same text, so their exact BM25 scores are equal; the other
+    two docs make the shards order the query's lists differently by
+    upper bound. All three query paths must return bitwise-equal scores
+    for the pair, lower doc_id first."""
+    from tfidf_spark.index.builder import build_index, load_index
+    from tfidf_spark.index.query import bm25_query_index, bm25_query_terms_local
+
+    tied = "apple banana damson cherry banana apple"
+    docs = [(12, tied), (3, tied), (14, "banana damson"), (8, "banana y y apple x")]
+    out = str(tmp_path / "idx")
+    build_index(spark.createDataFrame(docs, "doc_id bigint, content string"), out, n_shards=2)
+    idx = load_index(spark, out)
+    assert idx.doc_stats.filter("doc_id in (3, 12)").select(
+        F.pmod(F.xxhash64("doc_id"), F.lit(2))
+    ).distinct().count() == 2  # the pair really sits in different shards
+    q = ["apple", "banana", "cherry", "damson"]
+    results = [bm25_query_terms_local(idx, q, k=10)]
+    qdf = spark.createDataFrame([(0, q, 10)], "query_id long, terms array<string>, k int")
+    for prune in (True, False):
+        rows = bm25_query_index(idx, qdf, prune_by_collect=prune).orderBy("rank").collect()
+        results.append([(r["doc_id"], r["score"]) for r in rows])
+    for got in results:
+        assert [d for d, _ in got][:2] == [3, 12]
+        assert got[0][1] == got[1][1]

@@ -20,18 +20,25 @@ Scale design (the part that must survive 10^12 files):
   query time. Size n_shards so max_df/n_shards * 16B fits comfortably in
   an executor task.
 - **Group assembly is a Tungsten sort, not an aggregation.** Rows are
-  hash-repartitioned by (term, shard) and sorted by (term, shard, doc_id)
-  inside Tungsten (sign-flip docID order == signed order, so the sorted
-  stream is already in codec order); ONE mapInPandas pass slices group
-  boundaries and encodes. Two rejected designs, both measured: per-group
-  applyInPandas (~2ms Arrow overhead per group; vocab x shards groups
-  dominated the build) and sort_array(collect_list(...)) (the JVM object
-  aggregation alone cost ~7x the entire Python encode).
+  hash-repartitioned by (term, shard) and sorted by
+  (xxhash64(term), term, shard, doc_id) inside Tungsten (sign-flip docID
+  order == signed order, so each run is already in codec order); ONE
+  mapInPandas pass slices run boundaries and encodes them with
+  ``codec.encode_runs``. ``write_runs`` is that plan, and the build,
+  the incremental merge and the major compaction all write through it.
+  Two rejected designs, both measured: per-group applyInPandas (~2ms
+  Arrow overhead per group; vocab x shards groups dominated the build)
+  and sort_array(collect_list(...)) (the JVM object aggregation alone
+  cost ~7x the entire Python encode).
 - BM25's idf-independent weight (cnt, dl, avgdl folded in) is computed
   JVM-side and stored per posting; its per-block max is the block-max
   skip metadata. Query-time score = idf * stored weight.
-- The index is written sorted by term within range partitions so parquet
-  min/max statistics prune term lookups.
+- On-disk layout: term_postings files are hash-partitioned by
+  (term, shard) and, within each file, ordered by the term's xxhash64 —
+  term-HASH order, not term order. Parquet min/max statistics on
+  ``term`` therefore span nearly the whole vocabulary in every row group
+  and seldom skip one; a term lookup's pushed-down IN-filter mainly keeps
+  non-matching rows out of the plan above the scan.
 
 The materialized tables are the scalable analog of the reference's
 ``word_frequencies`` B-tree'd table (reference app/db/models.py:94-110):
@@ -61,7 +68,8 @@ from pyspark.sql.types import (
 )
 
 from tfidf_spark import BM25_B, BM25_K1
-from tfidf_spark.index.codec import BLOCK_SIZE, _THRESHOLDS, to_unsigned
+from tfidf_spark.index.checkpoint import StageCheckpointer, write_json_atomic
+from tfidf_spark.index.codec import encode_runs
 from tfidf_spark.operators.postings import with_term_counts
 from tfidf_spark.operators.scoring import bm25_weight_expr
 
@@ -89,105 +97,16 @@ INDEX_SCHEMA = StructType(
 )
 
 
-def _encode_group_arrays(
-    g_terms: np.ndarray,
-    g_shards: np.ndarray,
-    ids: np.ndarray,
-    ws: np.ndarray,
-    starts: np.ndarray,
-    end: int,
-) -> pd.DataFrame:
-    """Vectorized multi-group encode core (r8): one delta/varint pass
-    over the WHOLE sorted slice instead of one ``encode_postings`` call
-    per (term, shard) run. At vocab x n_shards groups per build (~80k at
-    bench scale, unbounded at corpus scale) the per-call numpy overhead
-    dominated the encode stage — this is ~25x faster on the same input
-    and byte-identical (the per-group codec math is unchanged: gaps
-    reset at group starts, blocks are 128-row slices within each group,
-    block_off is relative to the group's first varint byte).
-
-    ``ids``/``ws`` must already be truncated to ``end`` rows holding
-    complete groups that start at ``starts`` and are sorted by signed
-    doc_id within each group (codec sign-flip identity); ``g_terms`` /
-    ``g_shards`` carry ONE value per group (aligned with ``starts``)."""
-    starts = np.asarray(starts, dtype=np.int64)
-    bounds = np.append(starts, end)
-    u = to_unsigned(ids)
-    gaps = np.empty_like(u)
-    gaps[1:] = u[1:] - u[:-1]
-    gaps[starts] = u[starts]
-    nb = np.ones(gaps.size, dtype=np.int64)
-    for t in _THRESHOLDS:
-        nb += (gaps >= t).astype(np.int64)
-    byte_off = np.zeros(gaps.size + 1, dtype=np.int64)
-    np.cumsum(nb, out=byte_off[1:])
-    enc = np.zeros(int(byte_off[-1]), dtype=np.uint8)
-    offsets = byte_off[:-1]
-    for j in range(10):
-        mask = nb > j
-        if not mask.any():
-            break
-        byte = ((gaps[mask] >> np.uint64(7 * j)) & np.uint64(0x7F)).astype(np.uint8)
-        cont = (nb[mask] - 1 > j).astype(np.uint8) << 7
-        enc[offsets[mask] + j] = byte | cont
-    all_bytes = enc.tobytes()
-    sizes = np.diff(bounds)
-    nblocks = -(-sizes // BLOCK_SIZE)
-    first_blk = np.zeros(len(starts) + 1, dtype=np.int64)
-    np.cumsum(nblocks, out=first_blk[1:])
-    total_blocks = int(first_blk[-1])
-    grp = np.repeat(np.arange(len(starts)), nblocks)
-    within = np.arange(total_blocks) - first_blk[grp]
-    b_start = starts[grp] + within * BLOCK_SIZE
-    b_end = np.minimum(b_start + BLOCK_SIZE, bounds[grp + 1])
-    blast = ids[b_end - 1]
-    bmax = (
-        np.maximum.reduceat(ws, b_start)
-        if total_blocks
-        else np.empty(0, dtype=np.float64)
-    )
-    boff = byte_off[b_start] - byte_off[starts[grp]]
-    out = {k.name: [] for k in INDEX_SCHEMA.fields}
-    for i in range(len(starts)):
-        lo, hi = int(starts[i]), int(bounds[i + 1])
-        b0, b1 = int(first_blk[i]), int(first_blk[i + 1])
-        pb = all_bytes[byte_off[lo] : byte_off[hi]]
-        wb = ws[lo:hi].tobytes()
-        out["term"].append(g_terms[i])
-        out["shard"].append(int(g_shards[i]))
-        out["df_shard"].append(hi - lo)
-        out["postings"].append(pb)
-        out["weights"].append(wb)
-        out["block_last"].append(blast[b0:b1].tolist())
-        out["block_max"].append(bmax[b0:b1].tolist())
-        out["block_off"].append(boff[b0:b1].tolist())
-        out["n_bytes"].append(len(pb) + len(wb))
-    return pd.DataFrame(out)
-
-
-def _encode_groups(pdf: pd.DataFrame, starts: np.ndarray, end: int) -> pd.DataFrame:
-    """Encode the complete (term, shard) runs of a sorted slice.
-
-    ``starts`` are group start offsets; rows [starts[-1], end) form the
-    LAST complete group (the caller withholds any run that may continue
-    into the next Arrow batch)."""
-    starts = np.asarray(starts, dtype=np.int64)
-    return _encode_group_arrays(
-        pdf["term"].to_numpy()[starts],
-        pdf["shard"].to_numpy()[starts],
-        pdf["doc_id"].to_numpy(dtype=np.int64)[:end],
-        pdf["w"].to_numpy(dtype=np.float64)[:end],
-        starts,
-        end,
-    )
-
-
-def _encode_sorted_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel over a partition hash-partitioned by
-    (term, shard) and Tungsten-sorted by (term, shard, doc_id): slice group
-    boundaries per Arrow batch, carrying any run that may continue into the
-    next batch. Replaces a collect_list aggregation that was measured ~7x
-    more expensive than the whole Python encode."""
+def group_slices(
+    batches: Iterator[pd.DataFrame], keys: tuple[str, ...]
+) -> Iterator[tuple[pd.DataFrame, np.ndarray, int]]:
+    """Boundary-carrying slicer for mapInPandas kernels over partitions
+    sorted so each ``keys`` group's rows are adjacent. Yields
+    ``(pdf, starts, end)``: rows ``[starts[i], starts[i + 1])`` (the last
+    group ends at ``end``) are complete groups; a trailing group that may
+    continue into the next Arrow batch is held back and prepended to it.
+    Replaces per-group applyInPandas (~2 ms Arrow round-trip per group)
+    and collect_list aggregations (~7x the whole Python encode)."""
     pend: pd.DataFrame | None = None
     for pdf in batches:
         if pend is not None:
@@ -195,157 +114,108 @@ def _encode_sorted_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFr
             pend = None
         if not len(pdf):
             continue
-        terms = pdf["term"].to_numpy()
-        shards = pdf["shard"].to_numpy()
-        change = np.empty(len(pdf), dtype=bool)
+        change = np.zeros(len(pdf), dtype=bool)
         change[0] = True
-        change[1:] = (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
+        for key in keys:
+            col = pdf[key].to_numpy()
+            change[1:] |= col[1:] != col[:-1]
         starts = np.flatnonzero(change)
         if len(starts) == 1:
-            pend = pdf  # single (possibly continuing) run: hold it all
+            pend = pdf  # single (possibly continuing) group: hold it all
             continue
-        tail_start = int(starts[-1])
-        pend = pdf.iloc[tail_start:].reset_index(drop=True)
-        yield _encode_groups(pdf, starts[:-1], tail_start)
+        tail = int(starts[-1])
+        pend = pdf.iloc[tail:].reset_index(drop=True)
+        yield pdf, starts[:-1], tail
     if pend is not None and len(pend):
-        yield _encode_groups(pend, np.array([0]), len(pend))
+        yield pend, np.array([0]), len(pend)
 
 
-def _pack_partials_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Map-side combiner for the encode shuffle: per Arrow batch, sort by
-    (term, shard, doc_id) and pack each (term, shard) group's postings
-    into two binary columns (raw int64 ids + float64 weights, LE).
-
-    Why: the encode shuffle otherwise ships one ROW PER POSTING, each
-    carrying the term STRING plus ~25B of row overhead — ~40B/posting of
-    network for 16B of payload. Packed partials ship the term once per
-    (batch x term x shard) and the payload as two blobs: for
-    Zipf-distributed corpora the hot terms (most of the postings)
-    collapse to a few rows per batch, and the tail is never worse than
-    the row form. On a real cluster this is a ~2-3x shuffle-byte saving,
-    which at 10^12 files IS the build's network cost.
-
-    MEASURED LOCALLY (400k docs, pinned 8 cores, tmpfs shuffle,
-    2026-08-17): row 36.3-46.0s vs combined 42.5-46.3s — the local
-    shuffle is NOT network-bound, so the pack+merge CPU cancels the byte
-    saving; hence ``combine_shuffle`` defaults to False and the flag is
-    the cluster-deployment knob. Output is byte-identical either way
-    (test_index.py pins it), so flipping it is purely a physical-plan
-    choice.
-
-    Each partial is sorted by signed doc_id, so the reduce-side merge
-    (_merge_encode_stream) only has to argsort the concatenation of a
-    few sorted runs before encoding — and the final encoded bytes are
-    IDENTICAL to the row-shuffle path's (test_index.py pins it).
-    """
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        # numeric grouping only — no string sort: factorize terms to int
-        # codes (hash-based, O(n)), lexsort (doc_id, shard, code). Group
-        # ORDER is irrelevant (the shuffle re-groups anyway); the doc_id
-        # key keeps each partial internally sorted for the cheap
-        # reduce-side merge.
-        codes, uniques = pd.factorize(pdf["term"], sort=False)
-        shards = pdf["shard"].to_numpy(dtype=np.int64)
-        ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        ws = pdf["w"].to_numpy(dtype=np.float64)
-        order = np.lexsort((ids, shards, codes))
-        codes, shards, ids, ws = codes[order], shards[order], ids[order], ws[order]
-        change = np.empty(len(codes), dtype=bool)
-        change[0] = True
-        change[1:] = (codes[1:] != codes[:-1]) | (shards[1:] != shards[:-1])
-        starts = np.flatnonzero(change)
-        bounds = np.append(starts, len(codes))
-        uniq_arr = np.asarray(uniques)
-        out_terms, out_shards, out_ids, out_ws, out_n = [], [], [], [], []
-        for i in range(len(starts)):
-            lo, hi = int(bounds[i]), int(bounds[i + 1])
-            out_terms.append(uniq_arr[codes[lo]])
-            out_shards.append(int(shards[lo]))
-            out_ids.append(ids[lo:hi].tobytes())
-            out_ws.append(ws[lo:hi].tobytes())
-            out_n.append(hi - lo)
+def _encode_sorted_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel over rows hash-partitioned by (term, shard) and
+    sorted so each run's rows are adjacent and in doc_id order: every
+    complete (term, shard) run of a batch is encoded in one
+    ``codec.encode_runs`` call."""
+    for pdf, starts, end in group_slices(batches, ("term", "shard")):
+        runs = encode_runs(
+            pdf["doc_id"].to_numpy(dtype=np.int64)[:end],
+            pdf["w"].to_numpy(dtype=np.float64)[:end],
+            starts,
+        )
+        df_shard = runs.pop("n")
         yield pd.DataFrame(
             {
-                "term": out_terms,
-                "shard": out_shards,
-                "n": out_n,
-                "ids_b": out_ids,
-                "ws_b": out_ws,
+                "term": pdf["term"].to_numpy()[starts],
+                "shard": pdf["shard"].to_numpy()[starts],
+                "df_shard": df_shard,
+                **runs,
+                "n_bytes": [len(p) + len(w) for p, w in zip(runs["postings"], runs["weights"])],
             }
         )
 
 
-def _merge_encode_groups(pdf: pd.DataFrame, starts: np.ndarray, end: int) -> pd.DataFrame:
-    """Merge the complete (term, shard) partial groups of a sorted slice
-    and encode each merged run (reduce side of the combiner path).
-
-    r8: one global concatenation + one lexsort by (group, signed id)
-    replaces the per-group concat/argsort/encode loop, then the shared
-    vectorized core (``_encode_group_arrays``) encodes every merged run
-    in one pass — byte-identical (signed order == codec unsigned order
-    via the sign-flip identity; partials hold disjoint doc sets, so no
-    tie order exists to preserve)."""
-    starts = np.asarray(starts, dtype=np.int64)
-    bounds = np.append(starts, end)
-    terms_rows = pdf["term"].to_numpy()
-    shards_rows = pdf["shard"].to_numpy()
-    ids_b = pdf["ids_b"].iloc[:end]
-    ws_b = pdf["ws_b"].iloc[:end]
-    counts = np.fromiter(
-        (len(b) >> 3 for b in ids_b), dtype=np.int64, count=end
-    )
-    ids = (
-        np.concatenate([np.frombuffer(b, dtype=np.int64) for b in ids_b])
-        if end
-        else np.empty(0, dtype=np.int64)
-    )
-    ws = (
-        np.concatenate([np.frombuffer(b, dtype=np.float64) for b in ws_b])
-        if end
-        else np.empty(0, dtype=np.float64)
-    )
-    row_el_off = np.zeros(end + 1, dtype=np.int64)
-    np.cumsum(counts, out=row_el_off[1:])
-    # element-space group starts + a per-element group label for the sort
-    el_starts = row_el_off[starts]
-    el_end = int(row_el_off[-1])
-    grp_sizes = np.diff(np.append(el_starts, el_end))
-    grp_of_el = np.repeat(np.arange(len(starts)), grp_sizes)
-    order = np.lexsort((ids, grp_of_el))
-    ids, ws = ids[order], ws[order]
-    return _encode_group_arrays(
-        terms_rows[starts], shards_rows[starts], ids, ws, el_starts, el_end
-    )
+def shard_col(n_shards: int):
+    """A doc's shard: every posting of a doc lives in the runs of this
+    shard, so deletes and per-shard scans can locate it from the id."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
 
 
-def _merge_encode_stream(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """mapInPandas kernel over packed partials hash-partitioned by
-    (term, shard) and sorted by (term, shard): the same boundary-carrying
-    stream shape as _encode_sorted_stream, but each group is a handful of
-    packed partials instead of raw posting rows."""
-    pend: pd.DataFrame | None = None
-    for pdf in batches:
-        if pend is not None:
-            pdf = pd.concat([pend, pdf], ignore_index=True)
-            pend = None
-        if not len(pdf):
-            continue
-        terms = pdf["term"].to_numpy()
-        shards = pdf["shard"].to_numpy()
-        change = np.empty(len(pdf), dtype=bool)
-        change[0] = True
-        change[1:] = (terms[1:] != terms[:-1]) | (shards[1:] != shards[:-1])
-        starts = np.flatnonzero(change)
-        if len(starts) == 1:
-            pend = pdf
-            continue
-        tail_start = int(starts[-1])
-        pend = pdf.iloc[tail_start:].reset_index(drop=True)
-        yield _merge_encode_groups(pdf, starts[:-1], tail_start)
-    if pend is not None and len(pend):
-        yield _merge_encode_groups(pend, np.array([0]), len(pend))
+def write_runs(postings: DataFrame, n_shards: int, path: str) -> None:
+    """Posting rows ``(term, doc_id, w)`` -> encoded (term, shard) runs
+    (``INDEX_SCHEMA``) at ``path``. The one encode plan of the build, the
+    incremental merge and the major compaction:
+
+    Hash-shuffle rows by (term, shard), Tungsten-sort each partition by
+    (tkey, term, shard, doc_id) and stream the sorted rows through the
+    Arrow encode kernel. ``tkey = xxhash64(term)`` leads the sort so
+    Tungsten radix-sorts an int64 instead of string-comparing terms
+    (measured ~14% faster encode at 8 cores); ``term`` follows so hash
+    collisions still sort adjacent-but-separated. tkey is projected AFTER
+    the repartition so its 8 bytes/row never cross the shuffle. The
+    written files are therefore in term-HASH order, not term order.
+    (A repartitionByRange would re-run the pipeline just to sample
+    boundaries; a collect_list aggregation was measured ~7x the cost of
+    the entire Python encode.)"""
+    spark = postings.sparkSession
+    runs = (
+        postings.select("term", shard_col(n_shards).alias("shard"), "doc_id", "w")
+        .repartition("term", "shard")
+        .withColumn("tkey", F.xxhash64("term"))
+        .sortWithinPartitions("tkey", "term", "shard", "doc_id")
+        .drop("tkey")
+        .mapInPandas(_encode_sorted_stream, INDEX_SCHEMA)
+    )
+    # big Arrow batches ONLY for this plan: posting rows are ~30B, so
+    # 100k rows/batch is a few MB and amortizes the kernel's per-batch
+    # overhead; the session default stays 10k because the same knob
+    # sizes text-carrying UDF batches (session.py)
+    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(conf_key, "10000")
+    spark.conf.set(conf_key, "100000")
+    try:
+        runs.write.mode("overwrite").parquet(path)
+    finally:
+        spark.conf.set(conf_key, prev)
+
+
+def term_totals(runs: DataFrame) -> DataFrame:
+    """Per-term ``(term, df, bytes)`` of ``(term, df_shard, n_bytes)`` rows
+    — the term_stats table. df_shard/n_bytes are stored int columns, so
+    the scan never touches a posting blob (parquet column pruning)."""
+    return runs.groupBy("term").agg(
+        F.sum("df_shard").alias("df"), F.sum("n_bytes").alias("bytes")
+    )
+
+
+def run_totals(runs: DataFrame) -> tuple[int, int]:
+    """(postings, bytes) summed over encoded runs."""
+    r = runs.agg(F.sum("df_shard"), F.sum("n_bytes")).collect()[0]
+    return int(r[0] or 0), int(r[1] or 0)
+
+
+def write_manifest(out_dir: str, manifest: dict) -> None:
+    """Commit a snapshot: ``manifest.json`` is replaced atomically, so a
+    crash mid-write never leaves a truncated manifest behind."""
+    write_json_atomic(os.path.join(out_dir, "manifest.json"), manifest, indent=2)
 
 
 def stage_postings(
@@ -405,75 +275,16 @@ def stage_encode(
     n_shards: int,
     k1: float = BM25_K1,
     b: float = BM25_B,
-    combine_shuffle: bool = False,
 ) -> None:
     """Stage 3: staged postings (``stage_postings`` output) -> compressed
-    per-(term, shard) runs at ``out_dir/term_postings``. Public so the
-    stage-scaling harness (tools/stage_scaling.py) times EXACTLY the
-    build's encode plan in isolation.
-
-    Hash-shuffle rows by (term, shard), Tungsten-sort each partition
-    by (term, shard, doc_id), and stream the sorted rows through the
-    Arrow encode kernel. The sort also leaves the written index
-    ordered by term within each file -> tight parquet min/max stats
-    for term pruning, with NO extra shuffle. (A repartitionByRange
-    would re-run the pipeline just to sample boundaries; a
-    collect_list aggregation was measured ~7x the cost of the entire
-    Python encode.)
-    Leading int64 hash key lets Tungsten radix-sort instead of
-    string-comparing terms (measured ~14% faster encode at 8 cores,
-    identical output); `term` stays in the order so hash collisions
-    still sort adjacent-but-separated and the kernel's boundary
-    detection on (term, shard) is unaffected. tkey is projected
-    AFTER the repartition so those 8 bytes/row never cross the
-    shuffle — it is recomputed reduce-side from `term`."""
-    spark = raw.sparkSession
+    per-(term, shard) runs at ``out_dir/term_postings`` via ``write_runs``
+    (files in term-hash order). Public so the stage-scaling harness
+    (tools/stage_scaling.py) times EXACTLY the build's encode plan in
+    isolation."""
     postings = raw.filter(F.col("sec") == 0).withColumn(
         "w", bm25_weight_expr("cnt", "dl", avgdl if avgdl > 0 else 1.0, k1, b)
     )
-    sharded = postings.withColumn(
-        "shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
-    )
-    sorted_runs = (
-        sharded.select("term", "shard", "doc_id", "w")
-        .repartition("term", "shard")
-        .withColumn("tkey", F.xxhash64("term"))
-        .sortWithinPartitions("tkey", "term", "shard", "doc_id")
-        .drop("tkey")
-    )
-    # optional combiner path (cluster knob, see _pack_partials_stream
-    # docstring): pack per-(term, shard) binary partials BEFORE the
-    # shuffle, then merge-encode reduce-side; byte-identical output,
-    # ~2-3x fewer shuffle bytes, measurably neutral on local tmpfs.
-    packed_runs = (
-        sharded.select("term", "shard", "doc_id", "w")
-        .mapInPandas(
-            _pack_partials_stream,
-            "term string, shard int, n long, ids_b binary, ws_b binary",
-        )
-        .repartition("term", "shard")
-        .withColumn("tkey", F.xxhash64("term"))
-        .sortWithinPartitions("tkey", "term", "shard")
-        .drop("tkey", "n")
-    )
-    # big Arrow batches ONLY for this stage: posting rows are ~30B,
-    # so 100k rows/batch is a few MB and amortizes the kernel's
-    # per-batch overhead; the session default stays 10k because the
-    # same knob sizes text-carrying UDF batches (session.py)
-    conf_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
-    prev = spark.conf.get(conf_key, "10000")
-    spark.conf.set(conf_key, "100000")
-    try:
-        if combine_shuffle:
-            packed_runs.mapInPandas(
-                _merge_encode_stream, INDEX_SCHEMA
-            ).write.mode("overwrite").parquet(f"{out_dir}/term_postings")
-        else:
-            sorted_runs.mapInPandas(
-                _encode_sorted_stream, INDEX_SCHEMA
-            ).write.mode("overwrite").parquet(f"{out_dir}/term_postings")
-    finally:
-        spark.conf.set(conf_key, prev)
+    write_runs(postings, n_shards, f"{out_dir}/term_postings")
 
 
 def build_index(
@@ -488,7 +299,6 @@ def build_index(
     source_snapshot: str | None = None,
     resume: bool = False,
     avgdl_override: float | None = None,
-    combine_shuffle: bool = False,
 ) -> dict:
     """Build the full index at ``out_dir``. Returns the manifest dict.
 
@@ -502,8 +312,6 @@ def build_index(
     version; it defaults to the build parameters only, so explicit
     versioning is strongly recommended for real resume use).
     """
-    from tfidf_spark.index.checkpoint import StageCheckpointer
-
     spark = docs.sparkSession
     fingerprint = json.dumps(
         {
@@ -560,36 +368,19 @@ def build_index(
     n_docs = int(cs["n"] or 0)
     avgdl = float(cs["dl_sum"] or 0.0) / n_docs if n_docs else 0.0
     if avgdl_override is not None:
-        # incremental maintenance pins the ORIGINAL avgdl so stored
-        # weights stay mutually consistent across increments (see
-        # incremental.py for the drift/rebuild policy)
+        # incremental merges pin the base index's avgdl (see
+        # incremental.py for the drift/rebuild policy); a full rebuild
+        # under the same pinned value reproduces their stored weights —
+        # the reference index the merge-equivalence checks compare with
         avgdl = avgdl_override
 
-    def _encode():
-        stage_encode(
-            raw, out_dir, avgdl, n_shards, k1=k1, b=b,
-            combine_shuffle=combine_shuffle,
-        )
-
-    ckpt.run("encode", _encode)
+    ckpt.run("encode", lambda: stage_encode(raw, out_dir, avgdl, n_shards, k1=k1, b=b))
     tp = spark.read.parquet(f"{out_dir}/term_postings")
-
-    def _term_stats():
-        # bytes ride along so the manifest totals come from the tiny
-        # term_stats table; n_bytes is a stored int column, so this scan
-        # never touches the posting blobs (parquet column pruning)
-        tp.groupBy("term").agg(
-            F.sum("df_shard").alias("df"),
-            F.sum("n_bytes").alias("bytes"),
-        ).write.mode("overwrite").parquet(f"{out_dir}/term_stats")
-
-    ckpt.run("term_stats", _term_stats)
-
-    stats = (
-        spark.read.parquet(f"{out_dir}/term_stats")
-        .agg(F.sum("df").alias("n_postings"), F.sum("bytes").alias("bytes"))
-        .collect()[0]
+    ckpt.run(
+        "term_stats",
+        lambda: term_totals(tp).write.mode("overwrite").parquet(f"{out_dir}/term_stats"),
     )
+    n_postings, n_bytes = run_totals(tp)
     manifest = {
         "format_version": FORMAT_VERSION,
         # provenance: which source snapshot this index was built from
@@ -621,13 +412,12 @@ def build_index(
         },
         "metrics": {
             "docs_tokenized": n_docs,
-            "postings_emitted": int(stats["n_postings"] or 0),
-            "bytes_compressed": int(stats["bytes"] or 0),
+            "postings_emitted": n_postings,
+            "bytes_compressed": n_bytes,
             **ckpt.walls,
         },
     }
-    with open(os.path.join(out_dir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=2)
+    write_manifest(out_dir, manifest)
     return manifest
 
 
@@ -786,10 +576,12 @@ class IndexHandle:
         Two standard serving-tier moves, both scale-true:
 
         - ``term_postings`` and ``term_stats`` are persisted in executor
-          memory (MEMORY_AND_DISK — spills, never fails): repeated pruned
-          scans hit Spark's in-memory columnar cache, whose per-batch
-          min/max stats prune on the term-sorted layout, instead of
-          re-reading parquet footers + pages on every query.
+          memory (MEMORY_AND_DISK — spills, never fails): repeated term
+          lookups scan Spark's in-memory columnar cache instead of
+          re-listing files and re-reading parquet footers + pages on
+          every query. (The runs are in term-hash order, so the cache's
+          per-batch min/max stats on ``term`` seldom skip a batch; the
+          saving is the I/O and decode, not pruning.)
         - the ``term -> df`` dictionary is collected driver-side when the
           vocabulary fits (``<= df_dict_max_terms`` rows) — the
           coordinator-resident term dictionary every search tier keeps in

@@ -22,6 +22,21 @@ import time
 from collections.abc import Callable
 
 
+def write_json_atomic(path: str, obj, indent: int | None = None) -> None:
+    """Write ``obj`` as JSON to ``path`` all-or-nothing: serialize first,
+    write a temp file beside it, then ``os.replace`` it into place. A
+    failure at any step leaves the previous file (if any) intact."""
+    text = json.dumps(obj, indent=indent)
+    tmp = path + ".tmp"
+    try:
+        with open(tmp, "w") as f:
+            f.write(text)
+        os.replace(tmp, path)
+    finally:
+        if os.path.exists(tmp):
+            os.remove(tmp)
+
+
 class StageCheckpointer:
     def __init__(self, out_dir: str, fingerprint: str, resume: bool = True):
         self.out_dir = out_dir
@@ -54,19 +69,16 @@ class StageCheckpointer:
         metrics = fn() or {}
         wall = round(time.perf_counter() - t0, 3)
         self.walls[f"stage_{stage}_sec"] = wall
-        tmp = self._path(stage) + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "stage": stage,
-                    "fingerprint": self.fingerprint,
-                    "wall_sec": wall,
-                    "completed_at": time.strftime("%Y-%m-%d %H:%M:%S"),
-                    "metrics": metrics,
-                },
-                f,
-            )
-        os.replace(tmp, self._path(stage))  # atomic commit of the stage
+        write_json_atomic(  # atomic commit of the stage
+            self._path(stage),
+            {
+                "stage": stage,
+                "fingerprint": self.fingerprint,
+                "wall_sec": wall,
+                "completed_at": time.strftime("%Y-%m-%d %H:%M:%S"),
+                "metrics": metrics,
+            },
+        )
 
     def entries(self) -> list[dict]:
         out = []

@@ -7,6 +7,10 @@ payload; reference: app/services/huffman.py:26-102) with the standard
 inverted-index scheme the north_star names: gaps of sorted docIDs are
 small, varint makes them 1-2 bytes instead of 8.
 
+This is the only module that knows the run format: the index build,
+incremental merges and compactions encode through ``encode_runs``, and
+delete patches re-encode single runs through ``encode_postings``.
+
 docIDs are signed int64 (xxhash64-derived, may be negative). We map them
 to uint64 by flipping the sign bit, which makes unsigned order == signed
 order, so gaps are well-defined and non-negative.
@@ -24,6 +28,7 @@ import numpy as np
 BLOCK_SIZE = 128
 _SIGN = np.uint64(1 << 63)
 _THRESHOLDS = [np.uint64(1) << np.uint64(7 * k) for k in range(1, 10)]
+_RUN_FIELDS = ("postings", "weights", "block_last", "block_max", "block_off", "n")
 
 
 def to_unsigned(ids: np.ndarray) -> np.ndarray:
@@ -35,16 +40,17 @@ def to_signed(u: np.ndarray) -> np.ndarray:
     return (u ^ _SIGN).view(np.int64)
 
 
-def varint_encode(values: np.ndarray) -> bytes:
-    """LEB128-style varint encode of a uint64 array (vectorized)."""
-    v = np.ascontiguousarray(values, dtype=np.uint64)
-    if v.size == 0:
-        return b""
+def _varint_lengths(v: np.ndarray) -> np.ndarray:
+    """Bytes per LEB128 varint of each uint64 in ``v`` (1..10)."""
     nb = np.ones(v.size, dtype=np.int64)
     for t in _THRESHOLDS:
         nb += (v >= t).astype(np.int64)
-    offsets = np.concatenate([[0], np.cumsum(nb)[:-1]])
-    out = np.zeros(int(nb.sum()), dtype=np.uint8)
+    return nb
+
+
+def _varint_pack(v: np.ndarray, nb: np.ndarray, offsets: np.ndarray, size: int) -> bytes:
+    """Write varint ``i`` of ``v`` (``nb[i]`` bytes) at ``offsets[i]``."""
+    out = np.zeros(size, dtype=np.uint8)
     for j in range(10):
         mask = nb > j
         if not mask.any():
@@ -53,6 +59,15 @@ def varint_encode(values: np.ndarray) -> bytes:
         cont = (nb[mask] - 1 > j).astype(np.uint8) << 7
         out[offsets[mask] + j] = byte | cont
     return out.tobytes()
+
+
+def varint_encode(values: np.ndarray) -> bytes:
+    """LEB128-style varint encode of a uint64 array (vectorized)."""
+    v = np.ascontiguousarray(values, dtype=np.uint64)
+    nb = _varint_lengths(v)
+    offsets = np.zeros(v.size + 1, dtype=np.int64)
+    np.cumsum(nb, out=offsets[1:])
+    return _varint_pack(v, nb, offsets[:-1], int(offsets[-1]))
 
 
 def varint_decode(buf: bytes) -> np.ndarray:
@@ -71,8 +86,58 @@ def varint_decode(buf: bytes) -> np.ndarray:
     return np.add.reduceat(contrib, starts)
 
 
+def encode_runs(doc_ids: np.ndarray, weights: np.ndarray, starts) -> dict[str, list]:
+    """Encode several posting runs in ONE vectorized delta/varint pass.
+
+    ``doc_ids``/``weights`` hold the runs back to back: run ``i`` is rows
+    ``[starts[i], starts[i + 1])`` (the last run ends at the array end),
+    each non-empty and sorted by signed doc_id (== sign-flipped unsigned
+    order). Gaps reset at every run start, blocks are BLOCK_SIZE-row
+    slices within each run, and block_off is relative to the run's first
+    varint byte — so every run's bytes equal encoding it alone. One call
+    per Arrow batch instead of one per run: at vocab x n_shards runs per
+    build the per-call numpy overhead would dominate the encode stage.
+
+    Returns per-run lists keyed ``postings``, ``weights``, ``block_last``,
+    ``block_max``, ``block_off`` and ``n`` (see ``encode_postings``)."""
+    ids = np.asarray(doc_ids, dtype=np.int64)
+    ws = np.asarray(weights, dtype=np.float64)
+    starts = np.asarray(starts, dtype=np.int64)
+    bounds = np.append(starts, ids.size)
+    u = to_unsigned(ids)
+    gaps = np.empty_like(u)
+    gaps[1:] = u[1:] - u[:-1]
+    gaps[starts] = u[starts]
+    nb = _varint_lengths(gaps)
+    byte_off = np.zeros(gaps.size + 1, dtype=np.int64)
+    np.cumsum(nb, out=byte_off[1:])
+    all_bytes = _varint_pack(gaps, nb, byte_off[:-1], int(byte_off[-1]))
+    sizes = np.diff(bounds)
+    nblocks = -(-sizes // BLOCK_SIZE)
+    first_blk = np.zeros(len(starts) + 1, dtype=np.int64)
+    np.cumsum(nblocks, out=first_blk[1:])
+    run = np.repeat(np.arange(len(starts)), nblocks)
+    within = np.arange(int(first_blk[-1])) - first_blk[run]
+    b_start = starts[run] + within * BLOCK_SIZE
+    b_end = np.minimum(b_start + BLOCK_SIZE, bounds[run + 1])
+    blast = ids[b_end - 1]
+    bmax = np.maximum.reduceat(ws, b_start) if b_start.size else np.empty(0)
+    boff = byte_off[b_start] - byte_off[starts[run]]
+    out: dict[str, list] = {k: [] for k in _RUN_FIELDS}
+    for i in range(len(starts)):
+        lo, hi = int(bounds[i]), int(bounds[i + 1])
+        b0, b1 = int(first_blk[i]), int(first_blk[i + 1])
+        out["postings"].append(all_bytes[byte_off[lo] : byte_off[hi]])
+        out["weights"].append(ws[lo:hi].tobytes())
+        out["block_last"].append(blast[b0:b1].tolist())
+        out["block_max"].append(bmax[b0:b1].tolist())
+        out["block_off"].append(boff[b0:b1].tolist())
+        out["n"].append(hi - lo)
+    return out
+
+
 def encode_postings(doc_ids: np.ndarray, weights: np.ndarray, presorted: bool = False):
-    """Encode one term's (sub-)posting list.
+    """Encode one term's (sub-)posting list: ``encode_runs`` of one run.
 
     doc_ids: signed int64 (any order); weights: float64 aligned with ids.
     Returns (postings_bytes, weights_bytes, block_last, block_max,
@@ -98,23 +163,10 @@ def encode_postings(doc_ids: np.ndarray, weights: np.ndarray, presorted: bool = 
         # (ORDER BY doc_id) skip this.
         order = np.argsort(to_unsigned(ids), kind="stable")
         ids, w = ids[order], w[order]
-    u = to_unsigned(ids)
-    gaps = np.empty_like(u)
-    if u.size:
-        gaps[0] = u[0]
-        gaps[1:] = u[1:] - u[:-1]
-    n_blocks = (u.size + BLOCK_SIZE - 1) // BLOCK_SIZE
-    block_last = [int(ids[min((i + 1) * BLOCK_SIZE, u.size) - 1]) for i in range(n_blocks)]
-    block_max = [float(w[i * BLOCK_SIZE : (i + 1) * BLOCK_SIZE].max()) for i in range(n_blocks)]
-    if n_blocks:
-        nb = np.ones(gaps.size, dtype=np.int64)
-        for t in _THRESHOLDS:
-            nb += (gaps >= t).astype(np.int64)
-        starts = np.concatenate([[0], np.cumsum(nb)[:-1]])
-        block_off = [int(starts[i * BLOCK_SIZE]) for i in range(n_blocks)]
-    else:
-        block_off = []
-    return varint_encode(gaps), w.tobytes(), block_last, block_max, block_off, int(u.size)
+    if not ids.size:
+        return b"", b"", [], [], [], 0
+    run = encode_runs(ids, w, [0])
+    return tuple(run[k][0] for k in _RUN_FIELDS)
 
 
 def decode_postings(postings_bytes: bytes, weights_bytes: bytes):
@@ -146,16 +198,3 @@ def decode_block(
         weights_bytes, dtype=np.float64, count=gaps.size, offset=i * BLOCK_SIZE * 8
     )
     return to_signed(u), w
-
-
-def merge_encoded_runs(runs: list[tuple[bytes, bytes]]):
-    """Merge several encoded sub-runs of ONE term (disjoint docID sets,
-    e.g. per-salt partials) into a single encoded list."""
-    ids_parts, w_parts = [], []
-    for pb, wb in runs:
-        i, w = decode_postings(pb, wb)
-        ids_parts.append(i)
-        w_parts.append(w)
-    ids = np.concatenate(ids_parts) if ids_parts else np.empty(0, np.int64)
-    w = np.concatenate(w_parts) if w_parts else np.empty(0, np.float64)
-    return encode_postings(ids, w)

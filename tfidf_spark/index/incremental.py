@@ -34,7 +34,6 @@ should schedule a full rebuild — compact() raises unless forced.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame
@@ -44,7 +43,11 @@ from tfidf_spark.index.builder import (
     FORMAT_VERSION,
     INDEX_SCHEMA,
     IndexHandle,
-    _encode_sorted_stream,
+    run_totals,
+    shard_col,
+    term_totals,
+    write_manifest,
+    write_runs,
 )
 from tfidf_spark.operators.postings import with_term_counts
 from tfidf_spark.operators.scoring import bm25_weight_expr
@@ -85,6 +88,16 @@ def decode_runs(term_postings: DataFrame) -> DataFrame:
     )
 
 
+def _adjust_term_stats(term_stats: DataFrame, runs: DataFrame) -> DataFrame:
+    """``term_stats`` plus ``(term, df_shard, n_bytes)`` rows — new runs,
+    or signed corrections — re-totalled per term. O(vocabulary) rows;
+    terms left with no posting drop out."""
+    base = term_stats.select(
+        "term", F.col("df").alias("df_shard"), F.col("bytes").alias("n_bytes")
+    )
+    return term_totals(base.unionByName(runs)).filter(F.col("df") > 0)
+
+
 def delete_docs(index: IndexHandle, doc_ids: list[int]) -> int:
     """Tombstone deletes (the reference's cascade delete,
     app/db/models.py:89-91, done lakehouse-style): append doc_ids to
@@ -115,13 +128,7 @@ def full_compact(index: IndexHandle, out_dir: str) -> dict:
     if ts is not None:
         rows = rows.join(ts, "doc_id", "left_anti")
         kept_stats = kept_stats.join(ts, "doc_id", "left_anti")
-    (
-        rows.repartition("term", "shard")
-        .sortWithinPartitions("term", "shard", "doc_id")
-        .mapInPandas(_encode_sorted_stream, INDEX_SCHEMA)
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/term_postings")
-    )
+    write_runs(rows, index.manifest["n_shards"], f"{out_dir}/term_postings")
     kept_stats.write.mode("overwrite").parquet(f"{out_dir}/doc_stats")
     kept = spark.read.parquet(f"{out_dir}/doc_stats").agg(
         F.count(F.lit(1)).alias("n"), F.sum("dl").alias("dl_sum")
@@ -129,15 +136,10 @@ def full_compact(index: IndexHandle, out_dir: str) -> dict:
     n_docs = int(kept["n"])
 
     tp = spark.read.parquet(f"{out_dir}/term_postings")
-    tp.groupBy("term").agg(
-        F.sum("df_shard").alias("df"),
-        F.sum("n_bytes").alias("bytes"),
-    ).write.mode("overwrite").parquet(f"{out_dir}/term_stats")
+    term_totals(tp).write.mode("overwrite").parquet(f"{out_dir}/term_stats")
 
     dl_sum = float(kept["dl_sum"] or 0.0)
-    snap_stats = tp.agg(
-        F.sum("n_bytes").alias("b"), F.sum("df_shard").alias("p")
-    ).collect()[0]
+    n_postings, n_bytes = run_totals(tp)
     manifest = dict(index.manifest)
     # The output is a fresh single-segment snapshot: counters that
     # describe the INCREMENT CHAIN must reset or the signals they feed
@@ -169,14 +171,13 @@ def full_compact(index: IndexHandle, out_dir: str) -> dict:
             # metrics describe THIS snapshot, not the pre-compaction chain
             "metrics": {
                 "docs_tokenized": 0,
-                "postings_emitted": int(snap_stats["p"] or 0),
-                "bytes_written_postings": int(snap_stats["b"] or 0),
+                "postings_emitted": n_postings,
+                "bytes_written_postings": n_bytes,
                 "carried_segments": 0,
             },
         }
     )
-    with open(os.path.join(out_dir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=2)
+    write_manifest(out_dir, manifest)
     return manifest
 
 
@@ -205,8 +206,8 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
 
     Mechanics (Lucene-style patch segment + shadow list):
       1. tombstoned doc_ids can only live in runs of their own shard
-         (shard = pmod(xxhash64(doc_id), n_shards)), so only those
-         shards' runs are even scanned;
+         (``builder.shard_col``), so only those shards' runs are even
+         scanned;
       2. per candidate run, the block-max skip index localizes each
          deleted id to ONE block (searchsorted over block_last) — a run
          is rejected after decoding just the candidate blocks, so decode
@@ -260,9 +261,7 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
     del_u = np.sort(to_unsigned(del_ids))
     affected_shards = [
         r["shard"]
-        for r in ts.select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int").alias("shard")
-        )
+        for r in ts.select(shard_col(n_shards).alias("shard"))
         .distinct()
         .collect()
     ]
@@ -413,27 +412,18 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
         )
         all_shadow.write.mode("overwrite").parquet(f"{out_abs}/shadowed_runs")
 
-    # exact df/bytes correction per term — O(affected runs) rows
-    deltas = patched.groupBy("term").agg(
-        F.sum("dropped").alias("ddf"),
-        F.sum("old_bytes").alias("ob"),
-        F.sum(F.when(F.col("df_shard") > 0, F.col("n_bytes")).otherwise(0)).alias("nb"),
+    # exact df/bytes correction per term: one signed row per patched run
+    corrections = patched.select(
+        "term",
+        (-F.col("dropped")).alias("df_shard"),
+        (
+            F.when(F.col("df_shard") > 0, F.col("n_bytes")).otherwise(0)
+            - F.col("old_bytes")
+        ).alias("n_bytes"),
     )
-    (
-        index.term_stats.join(F.broadcast(deltas), "term", "left")
-        .select(
-            "term",
-            (F.col("df") - F.coalesce("ddf", F.lit(0))).alias("df"),
-            (
-                F.col("bytes")
-                - F.coalesce("ob", F.lit(0))
-                + F.coalesce("nb", F.lit(0))
-            ).alias("bytes"),
-        )
-        .filter(F.col("df") > 0)
-        .write.mode("overwrite")
-        .parquet(f"{out_abs}/term_stats")
-    )
+    _adjust_term_stats(index.term_stats, corrections).write.mode(
+        "overwrite"
+    ).parquet(f"{out_abs}/term_stats")
 
     # the snapshot is being rewritten anyway — carry the tombstones
     # DEDUPED so the new handle's n_tombstones equals the unique count
@@ -473,8 +463,7 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
             },
         }
     )
-    with open(os.path.join(out_abs, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=2)
+    write_manifest(out_abs, manifest)
     return manifest
 
 
@@ -496,7 +485,7 @@ def compact_index(
       1. tokenize delta -> delta postings with weights under the PINNED
          base avgdl
       2. encode the delta postings into ``out_dir/term_postings`` — a new
-         SEGMENT (same sort + stream kernel as the full build)
+         SEGMENT (``builder.write_runs``, the full build's encode plan)
       3. carry every base segment over BY REFERENCE: the new manifest's
          ``segments`` lists the base's directories plus the delta's; no
          base byte is read or written
@@ -566,35 +555,19 @@ def compact_index(
             f"{rebuild_threshold}: schedule a full rebuild (or force=True)"
         )
 
-    delta_posts = (
-        delta.filter(F.col("term").isNotNull())
-        .withColumn("w", bm25_weight_expr("cnt", "dl", pinned_avgdl, k1, b))
-        .withColumn("shard", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int"))
-        .select("term", "shard", "doc_id", "w")
+    delta_posts = delta.filter(F.col("term").isNotNull()).withColumn(
+        "w", bm25_weight_expr("cnt", "dl", pinned_avgdl, k1, b)
     )
-    (
-        delta_posts.repartition("term", "shard")
-        .sortWithinPartitions("term", "shard", "doc_id")
-        .mapInPandas(_encode_sorted_stream, INDEX_SCHEMA)
-        .write.mode("overwrite")
-        .parquet(f"{out_dir}/term_postings")
-    )
+    write_runs(delta_posts, n_shards, f"{out_dir}/term_postings")
     delta_stats.write.mode("overwrite").parquet(f"{out_dir}/doc_stats")
 
     # term_stats must stay one-row-per-term (the query-side idf join
     # broadcasts it), so it is re-aggregated: base stats ∪ the delta
-    # segment's per-term sums. O(vocabulary) rows; n_bytes/df_shard are
-    # stored int columns, so neither scan touches a posting blob.
+    # segment's runs. O(vocabulary) rows; no posting blob is read.
     seg = spark.read.parquet(f"{out_dir}/term_postings")
-    delta_ts = seg.groupBy("term").agg(
-        F.sum("df_shard").alias("df"), F.sum("n_bytes").alias("bytes")
-    )
-    merged_ts = (
-        index.term_stats.unionByName(delta_ts)
-        .groupBy("term")
-        .agg(F.sum("df").alias("df"), F.sum("bytes").alias("bytes"))
-    )
-    merged_ts.write.mode("overwrite").parquet(f"{out_dir}/term_stats")
+    _adjust_term_stats(
+        index.term_stats, seg.select("term", "df_shard", "n_bytes")
+    ).write.mode("overwrite").parquet(f"{out_dir}/term_stats")
 
     # carry tombstones forward: the merged snapshot must keep filtering
     # docs deleted from the base, or they silently reappear in results.
@@ -647,11 +620,7 @@ def compact_index(
             .parquet(f"{out_dir}/shadowed_runs")
         )
 
-    delta_bytes = (
-        seg.agg(
-            F.sum("n_bytes").alias("b"), F.sum("df_shard").alias("p")
-        ).collect()[0]
-    )
+    delta_postings, delta_bytes = run_totals(seg)
     manifest = dict(index.manifest)
     manifest.update(
         {
@@ -677,13 +646,12 @@ def compact_index(
                 "docs_tokenized": n_new,
                 # O(delta) evidence: posting bytes WRITTEN by this merge —
                 # the delta segment only; carried segments contribute 0.
-                "postings_emitted": int(delta_bytes["p"] or 0),
-                "bytes_written_postings": int(delta_bytes["b"] or 0),
+                "postings_emitted": delta_postings,
+                "bytes_written_postings": delta_bytes,
                 "carried_segments": len(base_segs["term_postings"]),
             },
         }
     )
-    with open(os.path.join(out_dir, "manifest.json"), "w") as f:
-        json.dump(manifest, f, indent=2)
+    write_manifest(out_dir, manifest)
     delta.unpersist()
     return manifest

@@ -16,7 +16,10 @@ Exactness argument: a doc excluded everywhere has, for its best list t*,
 ``mult_t* · block_max_t*(doc) + Σ_{u≠t*} U_u < θ``, which upper-bounds its
 full score, so it cannot beat the kth result. Ties are broken
 score-desc → doc_id-asc (the engine-wide deterministic tie-break,
-SURVEY.md §2.5-W1).
+SURVEY.md §2.5-W1); the emitted scores add each doc's per-term
+contributions in term order, whatever the shard or run, so docs with
+equal contributions get bitwise-equal scores and the tie-break sees the
+tie.
 
 Shards hold disjoint doc sets, so per-shard top-k union ⊇ global top-k and
 the final window merge is exact. Hot (stop-like) terms therefore never
@@ -42,7 +45,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from tfidf_spark.index.builder import IndexHandle
+from tfidf_spark.index.builder import IndexHandle, group_slices
 from tfidf_spark.index.codec import BLOCK_SIZE, decode_block, decode_postings
 
 _KERNEL_SCHEMA = StructType(
@@ -73,7 +76,7 @@ class _LazyList:
     so plain signed searchsorted is valid everywhere below.
     """
 
-    __slots__ = ("mult", "pb", "wb", "bl", "bm", "off", "n_blocks", "_cache")
+    __slots__ = ("mult", "pb", "wb", "bl", "bm", "off", "n_blocks", "_cache", "_full")
 
     def __init__(self, mult, pb, wb, block_last, block_max, block_off):
         self.mult = float(mult)
@@ -84,20 +87,27 @@ class _LazyList:
         self.off = np.asarray(block_off, dtype=np.int64)
         self.n_blocks = self.bl.size
         self._cache: dict[int, tuple[np.ndarray, np.ndarray]] = {}
+        self._full: tuple[np.ndarray, np.ndarray] | None = None
         DECODE_STATS["bytes_total"] += len(pb)
 
     def block(self, i: int):
         got = self._cache.get(i)
         if got is None:
-            got = decode_block(self.pb, self.wb, self.bl, self.off, i)
+            if self._full is not None:  # slice the full decode, never re-decode
+                lo = i * BLOCK_SIZE
+                got = (self._full[0][lo : lo + BLOCK_SIZE], self._full[1][lo : lo + BLOCK_SIZE])
+            else:
+                got = decode_block(self.pb, self.wb, self.bl, self.off, i)
+                hi = int(self.off[i + 1]) if i + 1 < self.n_blocks else len(self.pb)
+                DECODE_STATS["bytes_decoded"] += hi - int(self.off[i])
             self._cache[i] = got
-            hi = int(self.off[i + 1]) if i + 1 < self.n_blocks else len(self.pb)
-            DECODE_STATS["bytes_decoded"] += hi - int(self.off[i])
         return got
 
     def decode_all(self):
-        DECODE_STATS["bytes_decoded"] += len(self.pb)
-        return decode_postings(self.pb, self.wb)
+        if self._full is None:
+            DECODE_STATS["bytes_decoded"] += len(self.pb)
+            self._full = decode_postings(self.pb, self.wb)
+        return self._full
 
     def add_scores(self, cand: np.ndarray, out: np.ndarray) -> None:
         """out[j] += mult * weight(cand[j]) for every cand[j] present in
@@ -119,7 +129,7 @@ class _LazyList:
 def _topk_shard(pdf: pd.DataFrame) -> pd.DataFrame:
     query_id = int(pdf["query_id"].iloc[0])
     k = int(pdf["k"].iloc[0])
-    lists = []
+    lists, terms = [], []
     for row in pdf.itertuples(index=False):
         L = _LazyList(
             row.mult,
@@ -131,6 +141,7 @@ def _topk_shard(pdf: pd.DataFrame) -> pd.DataFrame:
         )
         if L.n_blocks:
             lists.append(L)
+            terms.append(row.term)
     if not lists:
         return pd.DataFrame(columns=["query_id", "k", "doc_id", "score"]).astype(
             {"query_id": "int64", "k": "int32", "doc_id": "int64", "score": "float64"}
@@ -166,6 +177,8 @@ def _topk_shard(pdf: pd.DataFrame) -> pd.DataFrame:
             }
         )
 
+    # the shard-independent order the final scores are summed in
+    by_term = [L for _, L in sorted(zip(terms, lists), key=lambda p: p[0])]
     # negative-idf (df == N) terms still contribute; upper bound uses max(.,0)
     lists.sort(key=lambda L: -(L.mult * float(L.bm.max())))
     U = np.array([max(L.mult * float(L.bm.max()), 0.0) for L in lists])
@@ -226,6 +239,21 @@ def _topk_shard(pdf: pd.DataFrame) -> pd.DataFrame:
     else:
         all_ids, all_s = cand0, s0
 
+    # Exact ties: the sums above add a doc's contributions in this
+    # shard's upper-bound list order, so two docs with identical
+    # contributions in different shards can land 1 ulp apart and the
+    # doc_id tie-break would never see the tie. Re-score every candidate
+    # that can still reach the top k (the kth score minus a margin far
+    # above the summation error) adding contributions in TERM order —
+    # the same order in every shard and run — from the cached blocks.
+    if all_s.size > k:
+        kth = np.partition(all_s, all_s.size - k)[all_s.size - k]
+        near = all_s >= kth - 1e-9 * abs(kth)
+        all_ids = all_ids[near]
+    all_s = np.zeros(all_ids.size, dtype=np.float64)
+    for L in by_term:
+        L.add_scores(all_ids, all_s)
+
     order = np.lexsort((all_ids, -all_s))[:k]
     return pd.DataFrame(
         {
@@ -239,35 +267,15 @@ def _topk_shard(pdf: pd.DataFrame) -> pd.DataFrame:
 
 def _topk_shard_stream(batches):
     """mapInPandas kernel over rows hash-partitioned by (query_id,
-    shard) and sorted so each group's rows are adjacent: slice group
-    boundaries per Arrow batch (carrying a possibly-continuing tail) and
-    run the MaxScore kernel per slice. Replaces groupBy().applyInPandas,
-    whose ~2 ms per-group Arrow round-trip dominated the batch path at
-    queries x shards groups (r8 profile: ~1.4 s of the 2.2 s batch50
-    main job)."""
-    pend: pd.DataFrame | None = None
-    for pdf in batches:
-        if pend is not None:
-            pdf = pd.concat([pend, pdf], ignore_index=True)
-            pend = None
-        if not len(pdf):
-            continue
-        q = pdf["query_id"].to_numpy()
-        s = pdf["shard"].to_numpy()
-        change = np.empty(len(pdf), dtype=bool)
-        change[0] = True
-        change[1:] = (q[1:] != q[:-1]) | (s[1:] != s[:-1])
-        starts = np.flatnonzero(change)
-        if len(starts) == 1:
-            pend = pdf
-            continue
-        tail = int(starts[-1])
-        pend = pdf.iloc[tail:].reset_index(drop=True)
-        bounds = np.append(starts[:-1], tail)
-        for i in range(len(bounds) - 1):
+    shard) and sorted so each group's rows are adjacent: the MaxScore
+    kernel runs per (query_id, shard) slice of ``group_slices``.
+    Replaces groupBy().applyInPandas, whose ~2 ms per-group Arrow
+    round-trip dominated the batch path at queries x shards groups (r8
+    profile: ~1.4 s of the 2.2 s batch50 main job)."""
+    for pdf, starts, end in group_slices(batches, ("query_id", "shard")):
+        bounds = np.append(starts, end)
+        for i in range(len(starts)):
             yield _topk_shard(pdf.iloc[bounds[i] : bounds[i + 1]])
-    if pend is not None and len(pend):
-        yield _topk_shard(pend)
 
 
 def bm25_query_index(
@@ -282,11 +290,14 @@ def bm25_query_index(
     Returns ``(query_id, doc_id, score, rank)``, rank 1..k per query,
     ordered by the deterministic tie-break.
 
-    ``prune_by_collect``: collect the distinct query terms driver-side and
-    push an IN-filter into the index scan — with the index sorted by term,
-    parquet min/max stats skip non-matching row groups (the analog of the
-    reference's B-tree probe on word, app/db/models.py:100). For huge query
-    batches set False to use a shuffle join instead.
+    ``prune_by_collect``: collect the query rows driver-side and push an
+    IN-filter on the distinct terms into the index scan (the analog of the
+    reference's B-tree probe on word, app/db/models.py:100), so only the
+    matching runs reach the broadcast join. The index files are in
+    term-HASH order (builder.write_runs), so parquet min/max stats on
+    ``term`` seldom skip a row group; the filter prunes rows, not I/O.
+    ``queries`` is evaluated once. For huge query batches set False to
+    use a shuffle join instead.
     """
     spark = queries.sparkSession
     # prune_by_collect=True already commits to collecting the batch's
@@ -296,18 +307,23 @@ def bm25_query_index(
     # shape paid an explode+groupBy+distinct+collect job AND repeated
     # the explode+groupBy shuffle inside the main job (r8 profile:
     # ~0.4 s of the 2.5 s batch50 path). Distributed batches
-    # (prune_by_collect=False) keep the general plan.
-    local_qterms: list[tuple[int, int, str, int]] | None = None
+    # (prune_by_collect=False) keep the general plan. orig_k comes from
+    # the same collected rows: re-reading ``queries`` would pay an
+    # expensive plan twice, and a non-deterministic one could disagree.
     if prune_by_collect:
         from collections import Counter
 
+        q_rows = [(int(r["query_id"]), int(r["k"]), r["terms"]) for r in queries.collect()]
         local_qterms = [
-            (int(r["query_id"]), int(r["k"]), t, int(c))
-            for r in queries.collect()
-            for t, c in Counter(r["terms"] or []).items()
+            (qid, k, t, int(c))
+            for qid, k, terms in q_rows
+            for t, c in Counter(terms or []).items()
         ]
         qterms = spark.createDataFrame(
             local_qterms, "query_id long, k int, term string, q_cnt long"
+        )
+        orig_k = spark.createDataFrame(
+            [(qid, k) for qid, k, _ in q_rows], "query_id long, k_orig int"
         )
     else:
         qterms = (
@@ -315,6 +331,7 @@ def bm25_query_index(
             .groupBy("query_id", "k", "term")
             .agg(F.count(F.lit(1)).alias("q_cnt"))
         )
+        orig_k = queries.select("query_id", F.col("k").alias("k_orig"))
     # Tombstoned docs are filtered AFTER the kernel; each per-shard top-k
     # over-fetches by the UNAPPLIED tombstone count so the final top-k
     # never under-fills (tombstones already physically applied by
@@ -331,10 +348,8 @@ def bm25_query_index(
     if prune_by_collect:
         if known_terms is not None:
             terms = sorted(set(known_terms))
-        elif local_qterms is not None:
-            terms = sorted({t for _, _, t, _ in local_qterms})
         else:
-            terms = [r["term"] for r in qterms.select("term").distinct().collect()]
+            terms = sorted({t for _, _, t, _ in local_qterms})
         if not terms:
             return spark.createDataFrame(
                 [], "query_id long, doc_id long, score double, rank int"
@@ -368,7 +383,6 @@ def bm25_query_index(
         )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     ranked = per_shard.withColumn("rank", F.row_number().over(w))
-    orig_k = queries.select("query_id", F.col("k").alias("k_orig"))
     return (
         ranked.join(F.broadcast(orig_k), "query_id")
         .filter(F.col("rank") <= F.col("k_orig"))

@@ -14,9 +14,10 @@ Spark-native incremental path those semantics generalize to:
 
 Incremental INDEX maintenance (merging new postings into compressed
 (term, shard) runs) is deliberately batch: each microbatch appends to the
-postings table, and ``compact_index`` re-encodes only the (term, shard)
-groups that received new postings — an idempotent merge expressible with
-the same builder kernels (merge_encoded_runs handles the codec side).
+postings table, and ``compact_index`` encodes only the new documents'
+postings into a delta segment (the build's own encode plan,
+``builder.write_runs``) and carries every existing segment by reference
+— no existing run is decoded or rewritten.
 """
 
 from __future__ import annotations

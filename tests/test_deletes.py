@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from tfidf_spark.index.builder import build_index, load_index
+from tfidf_spark.index.builder import build_index, load_index, shard_col
 from tfidf_spark.index.incremental import compact_deletes, delete_docs
 from tfidf_spark.index.query import bm25_query_terms
 from tfidf_spark.sources.corpus import synth_corpus, with_doc_id
@@ -247,3 +247,111 @@ def test_repatch_keeps_absolute_doc_stats(spark, corpus, tmp_path):
         fr = [(r["doc_id"], round(r["score"], 9))
               for r in bm25_query_terms(load_index(spark, fc), terms, k=10).collect()]
         assert pr == fr, terms
+
+
+def _top(idx, terms, k=10):
+    return [
+        (r["doc_id"], round(r["score"], 9))
+        for r in bm25_query_terms(idx, terms, k=k).collect()
+    ]
+
+
+def test_patch_merge_repatch_equals_full_compact(spark, corpus, tmp_path):
+    """patch -> compact_index -> more deletes -> patch_deletes: shadow rows
+    name segments by list position, so the second patch's rows (over the
+    base, the first patch segment and the delta) and the inherited ones
+    must all still hit the right runs. Result-identical to a full_compact
+    of the same snapshot."""
+    from tfidf_spark.index.incremental import (
+        compact_index,
+        full_compact,
+        patch_deletes,
+    )
+
+    root = tmp_path / "life"
+    base = corpus.filter(F.col("doc_id") % 4 != 0)
+    delta = corpus.filter(F.col("doc_id") % 4 == 0)
+    build_index(base, str(root / "s0"), n_shards=4)
+    s0 = load_index(spark, str(root / "s0"))
+    first = [d for d, _ in _top(s0, ["w1", "w2"], k=3)]
+    assert len(first) == 3
+    delete_docs(s0, first)
+    pm1 = patch_deletes(load_index(spark, str(root / "s0")), str(root / "s1"))
+    assert pm1["metrics"]["runs_patched"] >= 1
+
+    compact_index(
+        load_index(spark, str(root / "s1")), delta, str(root / "s2"), force=True
+    )
+    s2 = load_index(spark, str(root / "s2"))
+    assert len(s2.manifest["segments"]["term_postings"]) == 3
+    # second batch: base docs in the first victims' shards (their w1/w2
+    # runs were rewritten into the first patch segment), plus delta docs
+    # (the merge segment)
+    shard_of = {
+        r["doc_id"]: r["shard"]
+        for r in corpus.select("doc_id", shard_col(4).alias("shard")).collect()
+    }
+    patched_shards = {shard_of[d] for d in first}
+    hits = [d for d, _ in _top(s2, ["w1", "w2"], k=40)]
+    second = [
+        d for d in hits if d % 4 != 0 and shard_of[d] in patched_shards
+    ][:2] + [d for d in hits if d % 4 == 0][:2]
+    assert len(second) == 4
+    delete_docs(s2, second)
+
+    fm = full_compact(load_index(spark, str(root / "s2")), str(root / "full"))
+    pm2 = patch_deletes(load_index(spark, str(root / "s2")), str(root / "s3"))
+    s3 = load_index(spark, str(root / "s3"))
+    fidx = load_index(spark, str(root / "full"))
+
+    segs = s3.manifest["segments"]["term_postings"]
+    assert len(segs) == 4 and segs[-1] == "term_postings"
+    shadow = s3.shadowed_runs
+    assert dict(shadow.dtypes)["seg"] == "int"
+    positions = {r["seg"] for r in shadow.select("seg").distinct().collect()}
+    # inherited rows (base, position 0) plus new ones over the first
+    # patch segment (1) and the merge's delta segment (2)
+    assert positions == {0, 1, 2}
+
+    assert pm2["n_docs"] == fm["n_docs"] == corpus.count() - 7
+    p_ts = {r["term"]: r["df"] for r in s3.term_stats.collect()}
+    f_ts = {r["term"]: r["df"] for r in fidx.term_stats.collect()}
+    assert p_ts == f_ts
+    victims = set(first) | set(second)
+    for terms in (["w1", "w2"], ["w0", "w1"], ["w3", "w7"], ["w2"]):
+        got = _top(s3, terms, k=20)
+        assert got == _top(fidx, terms, k=20), terms
+        assert not ({d for d, _ in got} & victims)
+
+
+def test_local_path_equals_batch_path_with_tombstones(spark, corpus, tmp_path):
+    """bm25_query_terms_local on a snapshot holding both applied (patched)
+    and unapplied tombstones returns what bm25_query_index returns, cold
+    and on a warmed handle."""
+    from tfidf_spark.index.incremental import patch_deletes
+    from tfidf_spark.index.query import bm25_query_terms_local
+
+    out = str(tmp_path / "lidx")
+    build_index(corpus, out, n_shards=4)
+    idx = load_index(spark, out)
+    hits = [d for d, _ in _top(idx, ["w1", "w2"], k=8)]
+    delete_docs(idx, hits[:3])
+    patched = str(tmp_path / "lpatch")
+    patch_deletes(idx, patched)
+    pidx = load_index(spark, patched)
+    delete_docs(pidx, hits[3:6])
+    assert pidx.n_tombstones == 6 and pidx.n_unapplied_tombstones == 3
+
+    queries = (["w1", "w2"], ["w1", "w1", "w3"], ["w0"], ["w5", "nosuchterm"])
+    expected = {tuple(q): _top(pidx, q, k=5) for q in queries}
+    cold = load_index(spark, patched)
+    warm = load_index(spark, patched)
+    assert warm.warm()["df_dict_terms"]
+    for handle in (cold, warm):
+        for q in queries:
+            got = [
+                (d, round(s, 9)) for d, s in bm25_query_terms_local(handle, q, k=5)
+            ]
+            assert got == expected[tuple(q)], q
+            assert not ({d for d, _ in got} & set(hits[:6]))
+    warm.cool()

@@ -274,3 +274,16 @@ def test_warm_composes_with_tombstone_deletes(spark, tiny_corpus, tmp_path):
     for (_, a), (_, b) in zip(after, ref):
         assert a == pytest.approx(b, rel=1e-9)
     idx.cool()
+
+
+@pytest.mark.parametrize("version", [3, 5, None])
+def test_other_format_versions_need_a_rebuild(spark, tmp_path, version):
+    """Only FORMAT_VERSION snapshots load; any other version (older
+    shadow-ref layouts, newer engines, no version at all) fails with
+    one rebuild-required error before any table is read."""
+    manifest = {"n_docs": 1, "avgdl": 1.0, "k1": 1.2, "b": 0.75}
+    if version is not None:
+        manifest["format_version"] = version
+    (tmp_path / "manifest.json").write_text(json.dumps(manifest))
+    with pytest.raises(ValueError, match="rebuild required"):
+        load_index(spark, str(tmp_path))

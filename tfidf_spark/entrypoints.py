@@ -162,7 +162,9 @@ def q_bm25_topk(spark, sf_dir):
         ],
     ).collect()[0]
     n = int(st["n_docs"])
-    # same double as corpus_stats' F.avg(dl): long sum cast to double / n
+    # corpus_stats' F.avg(dl) sums dl as doubles; this sums longs and
+    # divides once. Equal while sum(dl) < 2^53 (every partial sum is exact
+    # in a double); beyond that the two may differ in the last ulp.
     avgdl = float(st["dl_sum"] or 0) / n if n else 0.0
     # df-default-1 on miss via NULL -> idf_expr's coalesce (identical
     # expression to the r7 join output, so the doubles are bit-identical)

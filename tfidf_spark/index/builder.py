@@ -73,12 +73,12 @@ from tfidf_spark.index.codec import encode_runs
 from tfidf_spark.operators.postings import with_term_counts
 from tfidf_spark.operators.scoring import bm25_weight_expr
 
-# On-disk snapshot format. v1: eager postings (no block_off); v2: block
-# byte offsets -> lazy per-block decode; v3: manifest lists SEGMENT
-# directories for term_postings/doc_stats (O(delta) incremental merges
-# carry old segments by reference). Readers accept <= FORMAT_VERSION;
-# v1 snapshots fail with a clear rebuild-required error (no block_off).
-FORMAT_VERSION = 3
+# On-disk snapshot format. v2 added block byte offsets (lazy per-block
+# decode), v3 segment lists in the manifest, v4 shadow rows that name a
+# segment by its POSITION in ``segments.term_postings`` (v3 used a ref
+# string relative to the snapshot). Readers accept exactly this version;
+# any other fails with one rebuild-required error.
+FORMAT_VERSION = 4
 
 INDEX_SCHEMA = StructType(
     [
@@ -400,12 +400,10 @@ def build_index(
         # Iceberg-manifest pattern: the snapshot LISTS its data segments;
         # incremental merges append a delta segment without rewriting the
         # carried ones (see incremental.compact_index). A fresh build is
-        # a single-segment snapshot. Segments under the index root are
-        # stored RELATIVE (resolved against the manifest's directory at
-        # read time) so a copied/moved index stays self-contained;
-        # chained increments reference base segments absolutely and carry
-        # the usual Iceberg caveat: move the bases with the snapshot, or
-        # full_compact into a self-contained one.
+        # a single-segment snapshot. Every entry is RELATIVE to the
+        # manifest's directory ("../base/term_postings" for a carried
+        # segment), so a chain of snapshots under one root moves as a
+        # unit; full_compact writes a self-contained one.
         "segments": {
             "term_postings": ["term_postings"],
             "doc_stats": ["doc_stats"],
@@ -432,6 +430,13 @@ class IndexHandle:
     which stays exact because every doc appears in at most one run per
     term. ``term_stats`` is always a single merged table (tiny, O(vocab))
     so the query-side idf join sees one row per term.
+
+    Segment lists are append-only: ``compact_index`` and
+    ``patch_deletes`` add one segment at the end and ``full_compact``
+    starts a new list, so a segment's position never changes along a
+    chain. Shadow rows (runs a delete patch superseded) therefore name
+    their segment by that position, ``(seg int, term, shard)``, and are
+    carried from snapshot to snapshot unchanged.
     """
 
     def __init__(self, spark: SparkSession, path: str):
@@ -443,11 +448,12 @@ class IndexHandle:
         self.path = os.path.abspath(path)
         with open(os.path.join(path, "manifest.json")) as f:
             self.manifest = json.load(f)
-        version = self.manifest.get("format_version", 2)
-        if version > FORMAT_VERSION:
+        version = self.manifest.get("format_version")
+        if version != FORMAT_VERSION:
             raise ValueError(
-                f"index at {path} has format_version={version}, newer than "
-                f"this engine's {FORMAT_VERSION}; upgrade the engine"
+                f"index at {path} has format_version={version}; this engine "
+                f"reads only format_version {FORMAT_VERSION}: rebuild required "
+                "(build_index over the source corpus)"
             )
         self.n_docs = self.manifest["n_docs"]
         self.avgdl = self.manifest["avgdl"]
@@ -458,44 +464,40 @@ class IndexHandle:
         self._df_dict: dict[str, int] | None = None
 
     def segment_paths(self, name: str) -> list[str]:
-        segs = self.manifest.get("segments")
-        if segs and name in segs:
-            # all current manifests store segment refs relative to THIS
-            # manifest's directory ("term_postings" for its own segment,
-            # "../base/term_postings" for chained bases) so a snapshot
-            # chain under a common root moves as a unit; absolute entries
-            # are accepted for pre-r4 chained manifests.
-            return [
-                p if os.path.isabs(p) else os.path.normpath(os.path.join(self.path, p))
-                for p in segs[name]
-            ]
-        # pre-v3 snapshot: single directory under the index root
-        return [os.path.join(self.path, name)]
+        return [
+            os.path.normpath(os.path.join(self.path, p))
+            for p in self.manifest["segments"][name]
+        ]
 
-    def _read_term_postings(self) -> DataFrame:
-        """Union of posting segments; on a patched snapshot
-        (incremental.patch_deletes) the carried segments' superseded runs
-        are anti-joined out against the broadcast shadow list keyed by
-        (segment ref, term, shard)."""
-        refs = self.manifest.get("segments", {}).get(
-            "term_postings", ["term_postings"]
-        )
-        paths = self.segment_paths("term_postings")
-        if not self.manifest.get("shadowed_runs"):
-            return self.spark.read.parquet(*paths)
+    def carried_segments(self, out_dir: str) -> dict[str, list[str]]:
+        """This snapshot's segment lists re-expressed relative to
+        ``out_dir``: the refs a snapshot written there carries, in the
+        same order (so shadow positions stay valid)."""
+        out_abs = os.path.abspath(out_dir)
+        return {
+            name: [os.path.relpath(p, out_abs) for p in self.segment_paths(name)]
+            for name in ("term_postings", "doc_stats")
+        }
+
+    def tagged_runs(self) -> DataFrame:
+        """Every segment's runs with an int ``seg`` column (the segment's
+        position), superseded runs (``shadowed_runs``) anti-joined out."""
         parts = [
-            self.spark.read.parquet(p).withColumn("_seg", F.lit(ref))
-            for ref, p in zip(refs, paths)
+            self.spark.read.parquet(p).withColumn("seg", F.lit(i))
+            for i, p in enumerate(self.segment_paths("term_postings"))
         ]
         df = parts[0]
         for part in parts[1:]:
             df = df.unionByName(part)
-        shadow = self.shadowed_runs.select(
-            F.col("seg").alias("_seg"), "term", "shard"
-        )
-        return df.join(
-            F.broadcast(shadow), ["_seg", "term", "shard"], "left_anti"
-        ).drop("_seg")
+        shadow = self.shadowed_runs
+        if shadow is None:
+            return df
+        return df.join(F.broadcast(shadow), ["seg", "term", "shard"], "left_anti")
+
+    def _read_term_postings(self) -> DataFrame:
+        if not self.manifest.get("shadowed_runs"):
+            return self.spark.read.parquet(*self.segment_paths("term_postings"))
+        return self.tagged_runs().drop("seg")
 
     @property
     def shadowed_runs(self) -> DataFrame | None:
@@ -519,12 +521,6 @@ class IndexHandle:
                 df = self.spark.read.parquet(*self.segment_paths(name))
             else:
                 df = self.spark.read.parquet(f"{self.path}/{name}")
-            if name == "term_postings" and "block_off" not in df.columns:
-                raise ValueError(
-                    f"index at {self.path} predates the block_off layout "
-                    f"(format_version >= 2): rebuild required "
-                    "(build_index over the source corpus)"
-                )
             self._dfs[name] = df
         return df
 
@@ -553,6 +549,14 @@ class IndexHandle:
             ts = self.tombstones
             self._n_tombstones = 0 if ts is None else ts.count()
         return self._n_tombstones
+
+    def tombstone_ids(self) -> list[int]:
+        """Collect the tombstoned doc_ids in one job; the row count primes
+        ``n_tombstones``, so no separate count job runs."""
+        ts = self.tombstones
+        ids = [] if ts is None else [r["doc_id"] for r in ts.collect()]
+        self._n_tombstones = len(ids)
+        return ids
 
     @property
     def n_unapplied_tombstones(self) -> int:

@@ -20,10 +20,21 @@ its posting rows) and the cascade-delete maintenance note
   guard enforces it): every doc contributes to a term's score from
   exactly one run, and extra per-run upper bounds only loosen pruning
   (never unsound).
+- ``patch_deletes`` applies tombstones by rewriting only the runs that
+  hold a deleted doc into a patch segment; the runs it replaced are
+  listed in ``shadowed_runs`` as ``(seg, term, shard)`` rows, where
+  ``seg`` is the segment's POSITION in the manifest's
+  ``segments.term_postings`` list.
 - ``full_compact`` / ``compact_deletes`` is the MAJOR compaction: decode
   the union of segments, drop tombstoned docs, re-encode into a fresh
   single-segment snapshot. Run it when segment count or tombstone
   fraction justifies the rewrite (manifest carries both counters).
+
+Segment lists are append-only until ``full_compact``: ``compact_index``
+and ``patch_deletes`` keep the base's list (re-expressed relative to
+the new snapshot by ``IndexHandle.carried_segments``) and append their
+own segment, so every position, and with it every shadow row, carries
+over unchanged.
 
 BM25 weight consistency: stored weights fold in avgdl at encode time.
 Increments PIN the base index's avgdl (so all runs score consistently)
@@ -214,9 +225,11 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
          cost is O(runs_in_affected_shards * blocks_probed), not
          O(postings);
       3. runs with a hit are fully decoded, filtered, re-encoded into
-         THIS snapshot's own ``term_postings`` (the patch segment); their
-         (segment, term, shard) keys go into ``shadowed_runs`` and the
-         reader anti-joins them out of the carried base segments;
+         THIS snapshot's own ``term_postings`` (the patch segment,
+         appended to the carried segment list); their (seg, term, shard)
+         keys — ``seg`` the run's segment position — are added to the
+         base's shadow rows, which carry over unchanged because
+         positions never move, and the reader anti-joins them out;
       4. term_stats df/bytes are corrected from the kernel's exact
          per-run drop counts, and n_docs/dl_sum from doc_stats — so
          query results are rank-identical to a ``full_compact`` of the
@@ -238,7 +251,6 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
         to_unsigned,
     )
 
-    spark = index.spark
     ts = index.tombstones
     if ts is None:
         raise ValueError("no tombstones to patch")
@@ -255,9 +267,7 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
     # retried delete produces duplicate tombstone rows — and the
     # assume_unique=True np.isin calls below have UNDEFINED results on a
     # non-unique test array (ADVICE r4 #2).
-    del_ids = np.unique(
-        np.fromiter((r["doc_id"] for r in ts.collect()), dtype=np.int64)
-    )
+    del_ids = np.unique(np.asarray(index.tombstone_ids(), dtype=np.int64))
     del_u = np.sort(to_unsigned(del_ids))
     affected_shards = [
         r["shard"]
@@ -280,23 +290,18 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
     n_docs_live = int(kept["n"])
     dl_sum_live = float(kept["dl"] or 0.0)
 
-    # carried segment refs, relative to the new snapshot (same scheme as
-    # compact_index); the reader keys shadow rows by these ref strings
-    seg_abs = [os.path.abspath(p) for p in index.segment_paths("term_postings")]
-    seg_refs = [os.path.relpath(p, out_abs) for p in seg_abs]
-
     def _patch(batches):
         for pdf in batches:
             rows = {
                 "term": [], "shard": [], "df_shard": [], "postings": [],
                 "weights": [], "block_last": [], "block_max": [],
-                "block_off": [], "n_bytes": [], "_seg": [], "dropped": [],
+                "block_off": [], "n_bytes": [], "seg": [], "dropped": [],
                 "old_bytes": [],
             }
             for term, shard, pb0, wb0, r_bl, r_bo, r_nb, seg in zip(
                 pdf["term"], pdf["shard"], pdf["postings"], pdf["weights"],
                 pdf["block_last"], pdf["block_off"], pdf["n_bytes"],
-                pdf["_seg"],
+                pdf["seg"],
             ):
                 bl = np.asarray(r_bl, dtype=np.int64)
                 bl_u = to_unsigned(bl)
@@ -330,57 +335,23 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
                 rows["block_max"].append(nbm)
                 rows["block_off"].append(nbo)
                 rows["n_bytes"].append(len(npb) + len(nwb))
-                rows["_seg"].append(seg)
+                rows["seg"].append(int(seg))
                 rows["dropped"].append(n_drop)
                 rows["old_bytes"].append(int(r_nb))
             if rows["term"]:
                 yield pd.DataFrame(rows)
 
-    # read carried segments ref-tagged, with the base's OWN shadow list
-    # (if it is already a patched snapshot) applied so dead runs are
-    # neither re-patched nor resurrected
-    parts = []
-    for ref, p in zip(seg_refs, seg_abs):
-        parts.append(spark.read.parquet(p).withColumn("_seg", F.lit(ref)))
-    tagged = parts[0]
-    for df in parts[1:]:
-        tagged = tagged.unionByName(df)
-    base_shadow = index.shadowed_runs
-    if base_shadow is not None:
-        # base shadow seg refs are relative to the BASE snapshot: remap to
-        # this snapshot's ref strings via the tiny (old_ref -> new_ref) map
-        remap = spark.createDataFrame(
-            [
-                (os.path.relpath(a, os.path.abspath(index.path)), ref)
-                for a, ref in zip(seg_abs, seg_refs)
-            ],
-            "old_ref string, _seg string",
-        )
-        shadow_remapped = (
-            base_shadow.withColumnRenamed("seg", "old_ref")
-            .join(F.broadcast(remap), "old_ref")
-            .select(F.col("_seg").alias("seg"), "term", "shard")
-        )
-        tagged = tagged.join(
-            F.broadcast(
-                shadow_remapped.select(
-                    F.col("seg").alias("_seg"), "term", "shard"
-                )
-            ),
-            ["_seg", "term", "shard"],
-            "left_anti",
-        )
-    else:
-        shadow_remapped = None
-
     schema = (
         "term string, shard int, df_shard long, postings binary, "
         "weights binary, block_last array<long>, block_max array<double>, "
-        "block_off array<long>, n_bytes long, _seg string, dropped long, "
+        "block_off array<long>, n_bytes long, seg int, dropped long, "
         "old_bytes long"
     )
+    # the base's own shadow rows are anti-joined out, so dead runs are
+    # neither re-patched nor resurrected
     patched = (
-        tagged.filter(F.col("shard").isin(affected_shards))
+        index.tagged_runs()
+        .filter(F.col("shard").isin(affected_shards))
         .mapInPandas(_patch, schema)
         .cache()
     )
@@ -402,15 +373,13 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
             "overwrite"
         ).parquet(f"{out_abs}/term_postings")
 
-    has_shadow = bool(n_runs) or shadow_remapped is not None
+    base_shadow = index.shadowed_runs
+    has_shadow = bool(n_runs) or base_shadow is not None
     if has_shadow:
-        new_shadow = patched.select(F.col("_seg").alias("seg"), "term", "shard")
-        all_shadow = (
-            new_shadow.unionByName(shadow_remapped)
-            if shadow_remapped is not None
-            else new_shadow
-        )
-        all_shadow.write.mode("overwrite").parquet(f"{out_abs}/shadowed_runs")
+        shadow = patched.select("seg", "term", "shard")
+        if base_shadow is not None:
+            shadow = shadow.unionByName(base_shadow)
+        shadow.write.mode("overwrite").parquet(f"{out_abs}/shadowed_runs")
 
     # exact df/bytes correction per term: one signed row per patched run
     corrections = patched.select(
@@ -433,20 +402,16 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
     )
     patched.unpersist()
 
-    doc_refs = [
-        os.path.relpath(os.path.abspath(p), out_abs)
-        for p in index.segment_paths("doc_stats")
-    ]
+    segments = index.carried_segments(out_abs)
+    n_carried = len(segments["term_postings"])
+    segments["term_postings"] += own_ref
     manifest = dict(index.manifest)
     manifest.update(
         {
             "format_version": FORMAT_VERSION,
             "n_docs": n_docs_live,
             "dl_sum": dl_sum_live,
-            "segments": {
-                "term_postings": seg_refs + own_ref,
-                "doc_stats": doc_refs,
-            },
+            "segments": segments,
             "shadowed_runs": has_shadow,
             # the query path's top-k over-fetch only needs to cover
             # tombstones NOT yet physically applied to the postings;
@@ -459,7 +424,7 @@ def patch_deletes(index: IndexHandle, out_dir: str) -> dict:
                 "runs_emptied": int(stats["emptied"] or 0),
                 # O(affected runs) evidence: bytes written this compaction
                 "bytes_written_postings": int(stats["b"] or 0),
-                "carried_segments": len(seg_refs),
+                "carried_segments": n_carried,
             },
         }
     )
@@ -487,15 +452,18 @@ def compact_index(
       2. encode the delta postings into ``out_dir/term_postings`` — a new
          SEGMENT (``builder.write_runs``, the full build's encode plan)
       3. carry every base segment over BY REFERENCE: the new manifest's
-         ``segments`` lists the base's directories plus the delta's; no
-         base byte is read or written
+         ``segments`` lists the base's directories, in their order, with
+         the delta's appended (lists are append-only until
+         ``full_compact``); no base byte is read or written
       4. re-aggregate term_stats (old stats ∪ delta stats — O(vocab),
          posting blobs untouched) and write the manifest
 
     ``code_aware`` defaults to the BASE index's tokenizer mode; passing a
     different mode explicitly raises — mixing tokenizers in one index
     silently corrupts postings. Existing tombstones are copied into the
-    new snapshot so deleted docs stay filtered after the merge.
+    new snapshot so deleted docs stay filtered after the merge, and a
+    patched base's shadow rows are copied verbatim: they name segments
+    by list position, which the append keeps valid.
     """
     spark = new_docs.sparkSession
     base_mode = bool(index.manifest.get("code_aware", False))
@@ -541,12 +509,7 @@ def compact_index(
     # pinned_avgdl * n_docs — chained increments each pin avgdl, so the
     # pinned-mean approximation would systematically shrink measured
     # drift as n_docs grows and the rebuild guard would never fire
-    base_dl_sum = float(
-        index.manifest.get(
-            "dl_sum",
-            index.manifest.get("true_avgdl", index.avgdl) * index.n_docs,
-        )
-    )
+    base_dl_sum = float(index.manifest["dl_sum"])
     true_avgdl = (base_dl_sum + float(new_dl_sum)) / max(n_docs, 1)
     drift = abs(true_avgdl - pinned_avgdl) / max(pinned_avgdl, 1e-12)
     if drift > rebuild_threshold and not force:
@@ -571,56 +534,19 @@ def compact_index(
 
     # carry tombstones forward: the merged snapshot must keep filtering
     # docs deleted from the base, or they silently reappear in results.
-    n_carried = index.n_tombstones
-    if n_carried:
+    if index.n_tombstones:
         index.tombstones.write.mode("overwrite").parquet(f"{out_dir}/tombstones")
 
-    # Carried base segments are stored RELATIVE TO THIS SNAPSHOT's
-    # directory (e.g. "../base/term_postings"): a chain of snapshots under
-    # a common root can then be moved/renamed as a unit and every link
-    # keeps resolving. abspath first, because segment_paths() output is
-    # cwd-relative when the base index was opened via a relative path —
-    # writing that verbatim would re-resolve against the NEW snapshot's
-    # directory and break (ADVICE r3). Computed BEFORE the shadow-remap
-    # block below, which zips against these refs (ADVICE r4: referencing
-    # it later raised UnboundLocalError on every patched base).
-    out_abs = os.path.abspath(out_dir)
-    base_segs = {
-        name: [
-            os.path.relpath(os.path.abspath(p), out_abs)
-            for p in index.segment_paths(name)
-        ]
-        for name in ("term_postings", "doc_stats")
-    }
-
-    # a patched base's shadow list must travel with its carried segments,
-    # or the runs a patch superseded would resurrect in the merged view;
-    # seg refs are remapped from base-relative to this snapshot's refs.
-    base_shadow = index.shadowed_runs
-    if base_shadow is not None:
-        base_abs = os.path.abspath(index.path)
-        remap = spark.createDataFrame(
-            [
-                (
-                    os.path.relpath(os.path.abspath(p), base_abs),
-                    new_ref,
-                )
-                for p, new_ref in zip(
-                    index.segment_paths("term_postings"),
-                    base_segs["term_postings"],
-                )
-            ],
-            "old_ref string, new_ref string",
-        )
-        (
-            base_shadow.withColumnRenamed("seg", "old_ref")
-            .join(F.broadcast(remap), "old_ref")
-            .select(F.col("new_ref").alias("seg"), "term", "shard")
-            .write.mode("overwrite")
-            .parquet(f"{out_dir}/shadowed_runs")
+    # a patched base's shadow rows travel verbatim: they name segments by
+    # position, and the base's segments keep their positions here
+    if index.shadowed_runs is not None:
+        index.shadowed_runs.write.mode("overwrite").parquet(
+            f"{out_dir}/shadowed_runs"
         )
 
     delta_postings, delta_bytes = run_totals(seg)
+    segments = index.carried_segments(out_dir)
+    n_carried = len(segments["term_postings"])
     manifest = dict(index.manifest)
     manifest.update(
         {
@@ -631,16 +557,11 @@ def compact_index(
             "dl_sum": base_dl_sum + float(new_dl_sum),
             "avgdl_drift": drift,
             "increments": index.manifest.get("increments", 0) + 1,
+            # the carried base segments ("../base/term_postings", relative
+            # to this snapshot) keep their positions; the delta segment is
+            # appended
             "segments": {
-                # every entry is relative to this snapshot's directory:
-                # "term_postings" is the delta segment inside it, the
-                # "../..."-style entries are the carried base segments.
-                # Move the common root as a unit and the chain survives;
-                # full_compact still self-contains when you want a
-                # snapshot with no external references at all.
-                "term_postings": base_segs["term_postings"]
-                + ["term_postings"],
-                "doc_stats": base_segs["doc_stats"] + ["doc_stats"],
+                name: refs + [name] for name, refs in segments.items()
             },
             "metrics": {
                 "docs_tokenized": n_new,
@@ -648,7 +569,7 @@ def compact_index(
                 # the delta segment only; carried segments contribute 0.
                 "postings_emitted": delta_postings,
                 "bytes_written_postings": delta_bytes,
-                "carried_segments": len(base_segs["term_postings"]),
+                "carried_segments": n_carried,
             },
         }
     )

@@ -282,7 +282,6 @@ def bm25_query_index(
     index: IndexHandle,
     queries: DataFrame,
     prune_by_collect: bool = True,
-    known_terms: list[str] | None = None,
 ) -> DataFrame:
     """Batch BM25 over the index.
 
@@ -346,10 +345,7 @@ def bm25_query_index(
     tp = index.term_postings
     ts = index.term_stats
     if prune_by_collect:
-        if known_terms is not None:
-            terms = sorted(set(known_terms))
-        else:
-            terms = sorted({t for _, _, t, _ in local_qterms})
+        terms = sorted({t for _, _, t, _ in local_qterms})
         if not terms:
             return spark.createDataFrame(
                 [], "query_id long, doc_id long, score double, rank int"
@@ -399,7 +395,7 @@ def bm25_query_terms(
         [(0, terms, k)], "query_id long, terms array<string>, k int"
     )
     return (
-        bm25_query_index(index, q, known_terms=terms)
+        bm25_query_index(index, q)
         .select("doc_id", "score")
         .orderBy("rank")
     )
@@ -415,12 +411,13 @@ def bm25_query_terms_local(
     serving tier uses; the distributed path (bm25_query_terms) is for
     query BATCHES. Exact same semantics: shards are disjoint doc sets,
     so feeding each run as its own list to the kernel double-counts
-    nothing, and df(term) = Σ df_shard of the collected runs.
+    nothing; df(term) comes from term_stats, as on the batch path, and
+    the top-k over-fetches by the unapplied tombstone count.
 
     ``df_budget`` guards the driver: a stop-like term's posting list is
     proportional to the corpus, and collecting it would OOM the driver at
     10^12 files. term_stats (one tiny pruned scan, one row per query
-    term) is consulted FIRST; if Σ df exceeds the budget the query is
+    term) is collected FIRST; if Σ df exceeds the budget the query is
     delegated to the distributed kernel (``bm25_query_index``), which
     returns identical results — the executors decode, the driver only
     sees k rows.
@@ -433,49 +430,44 @@ def bm25_query_terms_local(
         return []
     distinct = sorted(set(terms))
     q_cnt = {t: terms.count(t) for t in distinct}
-    df_dict = getattr(index, "_df_dict", None)
+    df_dict = index._df_dict
     if df_dict is not None:
         # warmed handle (IndexHandle.warm): the term dictionary is
         # coordinator-resident, so the budget precheck costs no Spark job
         # and vocabulary misses short-circuit with zero jobs
-        total_df = sum(df_dict.get(t, 0) for t in distinct)
-        if total_df == 0:
-            return []
+        df_of = {t: df_dict[t] for t in distinct if t in df_dict}
     else:
-        total_df = (
-            index.term_stats.filter(F.col("term").isin(distinct))
-            .agg(F.sum("df").alias("s"))
-            .collect()[0]["s"]
-            or 0
-        )
+        df_of = {
+            r["term"]: int(r["df"])
+            for r in index.term_stats.filter(F.col("term").isin(distinct))
+            .select("term", "df")
+            .collect()
+        }
+    total_df = sum(df_of.values())
+    if total_df == 0:
+        return []
     if total_df > df_budget:
         out = bm25_query_terms(index, terms, k=k).collect()
         return [(int(r["doc_id"]), float(r["score"])) for r in out]
     rows = (
         index.term_postings.filter(F.col("term").isin(distinct))
         .select(
-            "term", "shard", "df_shard",
+            "term", "shard",
             "postings", "weights", "block_last", "block_max", "block_off",
         )
         .collect()
     )
     if not rows:
         return []
-    df_total: dict[str, int] = {}
-    for r in rows:
-        df_total[r["term"]] = df_total.get(r["term"], 0) + r["df_shard"]
-    ts = index.tombstones
-    deleted = (
-        {r["doc_id"] for r in ts.collect()} if index.n_tombstones else set()
-    )
-    k_fetch = k + len(deleted)
+    deleted = set(index.tombstone_ids())
+    k_fetch = k + index.n_unapplied_tombstones
     pdf = pd.DataFrame(
         {
             "query_id": [0] * len(rows),
             "k": [k_fetch] * len(rows),
             "term": [r["term"] for r in rows],
             "mult": [
-                q_cnt[r["term"]] * math.log(index.n_docs / df_total[r["term"]])
+                q_cnt[r["term"]] * math.log(index.n_docs / df_of[r["term"]])
                 for r in rows
             ],
             "shard": [r["shard"] for r in rows],

@@ -124,7 +124,8 @@ def main():
         query_p50_ms = round(1000 * statistics.median(lat), 1)
 
         # serving-tier latency: executor-memory pinned tables + the
-        # coordinator-resident term dictionary (IndexHandle.warm)
+        # coordinator-resident term dictionary and posting runs
+        # (IndexHandle.warm)
         idx.warm()
         lat_w = []
         for qid, terms, k in qset[:8]:

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+import uuid
+
 import pytest
 
 from tfidf_spark.session import get_spark
@@ -10,6 +12,24 @@ def spark():
     s = get_spark(app_name="tfidf_spark-tests", master="local[4]", shuffle_partitions=8)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``run(fn) -> (fn(), number of Spark jobs fn started)``, counted
+    through a job group of its own."""
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run
 
 
 # A tiny hand-computable corpus (FIXTURES.md §3) + the §2.7-F1 tokenizer

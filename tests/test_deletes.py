@@ -355,3 +355,47 @@ def test_local_path_equals_batch_path_with_tombstones(spark, corpus, tmp_path):
             assert got == expected[tuple(q)], q
             assert not ({d for d, _ in got} & set(hits[:6]))
     warm.cool()
+
+
+def test_warmed_local_query_runs_zero_jobs(spark, corpus, tmp_path, spark_jobs):
+    """A warmed bm25_query_terms_local answers from driver-resident runs,
+    df and tombstone ids: zero Spark jobs on a fresh build, on a snapshot
+    with unapplied tombstones and on a patched snapshot with shadowed
+    runs, and results equal to a cold handle's and bm25_query_index's.
+    The pinned table's buffers stay within runs_bytes_bound, the estimate
+    warm()'s memory guard checks before it collects."""
+    from tfidf_spark.index.builder import runs_bytes_bound
+    from tfidf_spark.index.incremental import patch_deletes
+    from tfidf_spark.index.query import bm25_query_terms_local
+
+    out = str(tmp_path / "zidx")
+    build_index(corpus, out, n_shards=4)
+    patched = str(tmp_path / "zpatch")
+    queries = (["w1", "w2"], ["w1", "w1", "w3"], ["w0"], ["w5", "nosuchterm"], ["nosuchterm"])
+
+    def check(path):
+        cold = load_index(spark, path)
+        warm = load_index(spark, path)
+        assert warm.warm()["pinned_runs"]
+        stats = warm.term_stats.select("term", "df", "bytes").toArrow()
+        max_runs = warm.manifest["n_shards"] * len(warm.segment_paths("term_postings"))
+        assert warm._runs.get_total_buffer_size() <= runs_bytes_bound(stats, max_runs)
+        for q in queries:
+            want = bm25_query_terms_local(cold, q, k=5)
+            batch = [tuple(r) for r in bm25_query_terms(cold, q, k=5).collect()]
+            got, jobs = spark_jobs(lambda: bm25_query_terms_local(warm, q, k=5))
+            assert jobs == 0, q
+            for ref in (want, batch):
+                assert [d for d, _ in got] == [d for d, _ in ref], q
+                for (_, a), (_, b) in zip(got, ref):
+                    assert a == pytest.approx(b, rel=1e-9)
+        warm.cool()
+        return cold
+
+    idx = check(out)
+    hits = [d for d, _ in _top(idx, ["w1", "w2"], k=6)]
+    delete_docs(idx, hits[:3])
+    assert check(out).n_unapplied_tombstones == 3
+    patch_deletes(load_index(spark, out), patched)
+    pidx = check(patched)
+    assert pidx.manifest["shadowed_runs"]

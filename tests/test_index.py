@@ -276,6 +276,76 @@ def test_warm_composes_with_tombstone_deletes(spark, tiny_corpus, tmp_path):
     idx.cool()
 
 
+def test_warm_runs_guard_leaves_runs_unpinned(spark, tiny_index, spark_jobs, monkeypatch):
+    """When the runs do not fit the driver's result budget, warm() still
+    loads the df dictionary but leaves the runs on the executors
+    (cold-path scan); results are identical to a handle whose runs are
+    pinned, and after cool() the next query still returns the cold
+    results."""
+    from tfidf_spark.index import builder
+    from tfidf_spark.index.query import bm25_query_terms_local
+
+    out, _ = tiny_index
+    queries = (["a", "c"], ["a", "a", "b"], ["c", "zzz"], ["b"])
+    cold = load_index(spark, out)
+    want = [bm25_query_terms_local(cold, q, k=10) for q in queries]
+    guarded = load_index(spark, out)
+    with monkeypatch.context() as m:
+        m.setattr(builder, "driver_result_cap", lambda spark: 0)
+        info = guarded.warm()
+    assert info["pinned_runs"] is None
+    assert info["df_dict_terms"] == 3
+    assert guarded.pinned_runs(["a"]) is None
+    pinned = load_index(spark, out)
+    assert pinned.warm()["pinned_runs"] == 6
+    for q, w in zip(queries, want):
+        got, jobs = spark_jobs(lambda: bm25_query_terms_local(guarded, q, k=10))
+        assert jobs >= 1  # the runs are scanned
+        assert got == bm25_query_terms_local(pinned, q, k=10) == w
+    guarded.cool()
+    pinned.cool()
+    assert pinned.pinned_runs(["a"]) is None
+    assert [bm25_query_terms_local(pinned, q, k=10) for q in queries] == want
+
+
+@pytest.mark.parametrize("max_partition_bytes", [None, "256"])
+def test_warm_fills_each_cache_with_the_job_that_collects_it(
+    spark, tiny_index, spark_jobs, monkeypatch, max_partition_bytes
+):
+    """Set-up cost guard: warm() fills the term_stats cache with the
+    dictionary collect and the term_postings cache with the run collect,
+    so no count() runs for either table: one job per table, also when
+    the tables are read as many partitions (256-byte splits). Counting
+    each table before collecting, as warm() once did, took 7 jobs on the
+    single-partition read."""
+    key = "spark.sql.files.maxPartitionBytes"
+    if max_partition_bytes:
+        spark.conf.set(key, max_partition_bytes)
+    try:
+        out, _ = tiny_index
+        idx = load_index(spark, out)
+        idx.term_postings, idx.term_stats  # schema-inference jobs run here
+        if max_partition_bytes:
+            assert idx.term_stats.rdd.getNumPartitions() > 1
+        counted = []
+        real_count = type(idx.term_stats).count
+        monkeypatch.setattr(
+            type(idx.term_stats), "count", lambda df: counted.append(df) or real_count(df)
+        )
+        storage = spark.sparkContext._jsc.sc().getRDDStorageInfo
+        before = {r.id() for r in storage()}
+        info, jobs = spark_jobs(idx.warm)
+    finally:
+        spark.conf.unset(key)
+    assert info["df_dict_terms"] == 3 and info["pinned_runs"] == 6
+    assert counted == []
+    assert jobs <= 2
+    filled = [r for r in storage() if r.id() not in before]
+    assert len(filled) == 2
+    assert all(r.numCachedPartitions() == r.numPartitions() for r in filled)
+    idx.cool()
+
+
 @pytest.mark.parametrize("version", [3, 5, None])
 def test_other_format_versions_need_a_rebuild(spark, tmp_path, version):
     """Only FORMAT_VERSION snapshots load; any other version (older

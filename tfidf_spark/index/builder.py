@@ -49,11 +49,14 @@ doc_stats == its per-document rows, term_stats == its GROUP BY word view
 from __future__ import annotations
 
 import json
+import math
 import os
 from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -69,7 +72,7 @@ from pyspark.sql.types import (
 
 from tfidf_spark import BM25_B, BM25_K1
 from tfidf_spark.index.checkpoint import StageCheckpointer, write_json_atomic
-from tfidf_spark.index.codec import encode_runs
+from tfidf_spark.index.codec import BLOCK_SIZE, encode_runs
 from tfidf_spark.operators.postings import with_term_counts
 from tfidf_spark.operators.scoring import bm25_weight_expr
 
@@ -95,6 +98,42 @@ INDEX_SCHEMA = StructType(
         StructField("n_bytes", LongType()),
     ]
 )
+
+# The columns of a run the query kernel reads.
+RUN_COLUMNS = (
+    "term", "shard", "postings", "weights", "block_last", "block_max", "block_off",
+)
+
+# Driver bytes of one pinned run beyond its blobs and term: an 8-byte
+# offset per variable-width column (term, two blobs, three block lists),
+# the int32 shard and validity bits, rounded up. Each block adds one
+# 8-byte entry to each of the three block lists.
+_RUN_OVERHEAD = 64
+_BLOCK_BYTES = 24
+
+
+def runs_bytes_bound(stats: pa.Table, max_runs_per_term: int) -> int:
+    """Upper bound on the Arrow bytes of the runs of the ``(term, df,
+    bytes)`` rows in ``stats``: the blobs (``bytes``), per run its term
+    string and ``_RUN_OVERHEAD``, and ``_BLOCK_BYTES`` per block. A term
+    has at most ``min(df, max_runs_per_term)`` runs, and those runs at
+    most ``ceil(df / BLOCK_SIZE)`` + runs blocks."""
+    df = stats.column("df").to_numpy()
+    runs = np.minimum(df, max_runs_per_term)
+    term_len = pc.binary_length(stats.column("term")).to_numpy()
+    blocks = -(-df // BLOCK_SIZE) + runs
+    return int(
+        stats.column("bytes").to_numpy().sum()
+        + (runs * (term_len + _RUN_OVERHEAD)).sum()
+        + (blocks * _BLOCK_BYTES).sum()
+    )
+
+
+def driver_result_cap(spark: SparkSession) -> float:
+    """Spark's cap on the bytes one action may collect to the driver
+    (``spark.driver.maxResultSize``, default 1g; 0 means no cap)."""
+    conf = spark.sparkContext._jsc.sc().getConf()
+    return conf.getSizeAsBytes("spark.driver.maxResultSize", "1g") or math.inf
 
 
 def group_slices(
@@ -461,7 +500,12 @@ class IndexHandle:
         self.b = self.manifest["b"]
         self._dfs: dict[str, DataFrame] = {}
         self._n_tombstones: int | None = None
+        self._tombstone_ids: list[int] | None = None
         self._df_dict: dict[str, int] | None = None
+        # warm()-pinned runs: one Arrow table sorted by term, and each
+        # term's [start, end) row slice of it
+        self._runs: pa.Table | None = None
+        self._run_slices: dict[str, tuple[int, int]] = {}
 
     def segment_paths(self, name: str) -> list[str]:
         return [
@@ -551,12 +595,14 @@ class IndexHandle:
         return self._n_tombstones
 
     def tombstone_ids(self) -> list[int]:
-        """Collect the tombstoned doc_ids in one job; the row count primes
+        """The tombstoned doc_ids: collected in one job on first use and
+        memoized until ``invalidate_tombstones``. The row count primes
         ``n_tombstones``, so no separate count job runs."""
-        ts = self.tombstones
-        ids = [] if ts is None else [r["doc_id"] for r in ts.collect()]
-        self._n_tombstones = len(ids)
-        return ids
+        if self._tombstone_ids is None:
+            ts = self.tombstones
+            self._tombstone_ids = [] if ts is None else [r["doc_id"] for r in ts.collect()]
+            self._n_tombstones = len(self._tombstone_ids)
+        return self._tombstone_ids
 
     @property
     def n_unapplied_tombstones(self) -> int:
@@ -573,53 +619,107 @@ class IndexHandle:
     def invalidate_tombstones(self) -> None:
         self._dfs.pop("tombstones", None)
         self._n_tombstones = None
+        self._tombstone_ids = None
 
     def warm(self, df_dict_max_terms: int = 1_000_000) -> dict:
         """Pin the serving tables for low-latency querying.
 
-        Two standard serving-tier moves, both scale-true:
+        Three standard serving-tier moves, all scale-true:
 
         - ``term_postings`` and ``term_stats`` are persisted in executor
-          memory (MEMORY_AND_DISK — spills, never fails): repeated term
-          lookups scan Spark's in-memory columnar cache instead of
-          re-listing files and re-reading parquet footers + pages on
-          every query. (The runs are in term-hash order, so the cache's
-          per-batch min/max stats on ``term`` seldom skip a batch; the
-          saving is the I/O and decode, not pruning.)
+          memory (MEMORY_AND_DISK — spills, never fails), so the batch
+          path and cold-path scans read Spark's in-memory columnar cache
+          instead of re-listing files and re-reading parquet footers +
+          pages. Each cache is filled by the job that collects from it
+          below; a ``count()`` runs only for a table nothing collects
+          whole.
         - the ``term -> df`` dictionary is collected driver-side when the
           vocabulary fits (``<= df_dict_max_terms`` rows) — the
           coordinator-resident term dictionary every search tier keeps in
           RAM (sharded across coordinators at 10^12-file scale; the guard
           refuses rather than OOMs a driver that was not sized for it).
           ``bm25_query_terms_local``'s df-budget precheck then runs with
-          no Spark job, removing one of its two scheduler round-trips,
-          and vocabulary misses short-circuit to [] with zero jobs.
+          no Spark job, and vocabulary misses short-circuit to [].
+          ``toArrow`` runs the limited collect as ONE job however many
+          partitions ``term_stats`` has (``collect`` would scan them in
+          growing rounds, one job each).
+        - the posting runs themselves are collected driver-side as ONE
+          Arrow table sorted by term, with a ``term -> (start, end)``
+          row-slice index, when the dictionary fits and twice
+          ``runs_bytes_bound`` of its rows (the collected table plus the
+          sort's copy; blobs, terms, block lists and per-run offsets) fits
+          ``spark.driver.maxResultSize`` — the driver's result budget the
+          operator sized, past which the collect itself would abort. A
+          warmed ``bm25_query_terms_local`` then slices its runs from the
+          table and runs zero Spark jobs. The runs come from
+          ``term_postings``, the shadow-filtered view, so a patched
+          snapshot pins exactly what the scan would return. The two
+          term-keyed dicts are bounded by ``df_dict_max_terms``, not by
+          the byte budget.
 
-        Returns ``{"persisted": [...], "df_dict_terms": n | None}``.
-        Call again after snapshot mutations (the handle's tables are
-        immutable per snapshot, so staleness only enters via a NEW
-        handle — which starts cold)."""
+        The tombstone ids are collected too (memoized on the handle until
+        a delete invalidates them).
+
+        Returns ``{"persisted": [...], "df_dict_terms": n | None,
+        "pinned_runs": rows | None}``. The handle's tables are immutable
+        per snapshot, so staleness only enters via a NEW handle — which
+        starts cold."""
         from pyspark import StorageLevel
 
         persisted = []
         for name in ("term_postings", "term_stats"):
-            df = self._cached(name).persist(StorageLevel.MEMORY_AND_DISK)
-            self._dfs[name] = df
-            df.count()  # materialize now, not on the first query
+            self._dfs[name] = self._cached(name).persist(StorageLevel.MEMORY_AND_DISK)
             persisted.append(name)
         self._df_dict = None
+        self._runs, self._run_slices = None, {}
         if df_dict_max_terms > 0:
-            rows = (
-                self.term_stats.select("term", "df")
+            stats = (
+                self.term_stats.select("term", "df", "bytes")
                 .limit(df_dict_max_terms + 1)
-                .collect()
+                .toArrow()
             )
-            if len(rows) <= df_dict_max_terms:
-                self._df_dict = {r["term"]: int(r["df"]) for r in rows}
+            if stats.num_rows <= df_dict_max_terms:
+                self._df_dict = dict(
+                    zip(stats.column("term").to_pylist(), stats.column("df").to_pylist())
+                )
+        if self._df_dict is None:
+            self.term_stats.count()  # the limited collect may stop early
+        max_runs = self.manifest["n_shards"] * len(self.manifest["segments"]["term_postings"])
+        if self._df_dict is not None and 2 * runs_bytes_bound(
+            stats, max_runs
+        ) <= driver_result_cap(self.spark):
+            self._pin_runs(self.term_postings.select(*RUN_COLUMNS).toArrow())
+        else:
+            self.term_postings.count()
+        self.tombstone_ids()
         return {
             "persisted": persisted,
             "df_dict_terms": None if self._df_dict is None else len(self._df_dict),
+            "pinned_runs": None if self._runs is None else self._runs.num_rows,
         }
+
+    def _pin_runs(self, runs: pa.Table) -> None:
+        runs = runs.sort_by("term")
+        terms = runs.column("term").to_numpy(zero_copy_only=False)
+        new = np.ones(terms.size, dtype=bool)
+        new[1:] = terms[1:] != terms[:-1]
+        starts = np.flatnonzero(new)
+        ends = np.append(starts[1:], terms.size)
+        self._run_slices = dict(
+            zip(terms[starts].tolist(), zip(starts.tolist(), ends.tolist()))
+        )
+        self._runs = runs
+
+    def pinned_runs(self, terms: list[str]) -> pa.Table | None:
+        """The ``RUN_COLUMNS`` rows of ``terms`` from the runs ``warm``
+        pinned on the driver, or None when no runs are pinned."""
+        if self._runs is None:
+            return None
+        parts = [
+            self._runs.slice(start, end - start)
+            for start, end in (self._run_slices[t] for t in terms if t in self._run_slices)
+        ]
+        return pa.concat_tables(parts) if parts else self._runs.slice(0, 0)
 
     def cool(self) -> None:
         """Release everything ``warm`` pinned."""
@@ -628,6 +728,8 @@ class IndexHandle:
             if df is not None:
                 df.unpersist()
         self._df_dict = None
+        self._runs, self._run_slices = None, {}
+        self._tombstone_ids = None
 
 
 def load_index(spark: SparkSession, path: str) -> IndexHandle:

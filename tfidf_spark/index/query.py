@@ -45,7 +45,7 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
-from tfidf_spark.index.builder import IndexHandle, group_slices
+from tfidf_spark.index.builder import RUN_COLUMNS, IndexHandle, group_slices
 from tfidf_spark.index.codec import BLOCK_SIZE, decode_block, decode_postings
 
 _KERNEL_SCHEMA = StructType(
@@ -404,27 +404,29 @@ def bm25_query_terms(
 def bm25_query_terms_local(
     index: IndexHandle, terms: list[str], k: int = 10, df_budget: int = 2_000_000
 ) -> list[tuple[int, float]]:
-    """Low-latency single-query path: ONE pruned scan collects the
-    query's (term, shard) runs to the driver (a few compressed blobs),
-    then the MaxScore kernel runs locally — no shuffle, no window, no
-    Python-worker round trip. This is the query-coordinator pattern a
-    serving tier uses; the distributed path (bm25_query_terms) is for
-    query BATCHES. Exact same semantics: shards are disjoint doc sets,
+    """Low-latency single-query path: the query's (term, shard) runs (a
+    few compressed blobs) reach the driver and the MaxScore kernel runs
+    locally — no shuffle, no window, no Python-worker round trip. This
+    is the query-coordinator pattern a serving tier uses; the
+    distributed path (bm25_query_terms) is for query BATCHES.
+
+    On a handle warmed by ``IndexHandle.warm`` the df dictionary, the
+    runs and the tombstone ids are driver-resident, so the query runs
+    zero Spark jobs. Cold (or when warm's guards refused to pin), one
+    tiny term_stats scan collects df and ONE pruned scan collects the
+    runs. Exact same semantics either way: shards are disjoint doc sets,
     so feeding each run as its own list to the kernel double-counts
     nothing; df(term) comes from term_stats, as on the batch path, and
     the top-k over-fetches by the unapplied tombstone count.
 
     ``df_budget`` guards the driver: a stop-like term's posting list is
     proportional to the corpus, and collecting it would OOM the driver at
-    10^12 files. term_stats (one tiny pruned scan, one row per query
-    term) is collected FIRST; if Σ df exceeds the budget the query is
-    delegated to the distributed kernel (``bm25_query_index``), which
+    10^12 files. df is known FIRST; if Σ df exceeds the budget the query
+    is delegated to the distributed kernel (``bm25_query_index``), which
     returns identical results — the executors decode, the driver only
     sees k rows.
     """
     import math
-
-    import pandas as pd
 
     if not terms:
         return []
@@ -449,35 +451,20 @@ def bm25_query_terms_local(
     if total_df > df_budget:
         out = bm25_query_terms(index, terms, k=k).collect()
         return [(int(r["doc_id"]), float(r["score"])) for r in out]
-    rows = (
-        index.term_postings.filter(F.col("term").isin(distinct))
-        .select(
-            "term", "shard",
-            "postings", "weights", "block_last", "block_max", "block_off",
+    runs = index.pinned_runs(distinct)
+    if runs is None:
+        runs = (
+            index.term_postings.filter(F.col("term").isin(distinct))
+            .select(*RUN_COLUMNS)
+            .toArrow()
         )
-        .collect()
-    )
-    if not rows:
+    if not runs.num_rows:
         return []
     deleted = set(index.tombstone_ids())
-    k_fetch = k + index.n_unapplied_tombstones
-    pdf = pd.DataFrame(
-        {
-            "query_id": [0] * len(rows),
-            "k": [k_fetch] * len(rows),
-            "term": [r["term"] for r in rows],
-            "mult": [
-                q_cnt[r["term"]] * math.log(index.n_docs / df_of[r["term"]])
-                for r in rows
-            ],
-            "shard": [r["shard"] for r in rows],
-            "postings": [bytes(r["postings"]) for r in rows],
-            "weights": [bytes(r["weights"]) for r in rows],
-            "block_last": [r["block_last"] for r in rows],
-            "block_max": [r["block_max"] for r in rows],
-            "block_off": [r["block_off"] for r in rows],
-        }
-    )
+    pdf = runs.to_pandas()
+    pdf["query_id"] = 0
+    pdf["k"] = k + index.n_unapplied_tombstones
+    pdf["mult"] = [q_cnt[t] * math.log(index.n_docs / df_of[t]) for t in pdf["term"]]
     out = _topk_shard(pdf)
     result = [
         (int(d), float(s))
